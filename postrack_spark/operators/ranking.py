@@ -26,7 +26,8 @@ The classic scalable replacement (same trick Spark's own
    so plans using this operator contain zero WindowExec nodes.
 5. rank = offset(pid) + seq + 1, joined back via broadcast (P rows).
 
-Measured (scripts/stress_10x.py, local[32]): exact_ntile over the
+Measured (round 4, local[32], with a since-deleted stress script; the
+10x lane is now ``bench.py --factor 10``): exact_ntile over the
 per-customer revenue frame takes 1.7 s at sf0.1 and 2.9 s on the 10x
 key-shifted union — 1.7x wall for 10x rows, i.e. the fixed per-stage
 overheads still dominate and the only data-sized term is the one range

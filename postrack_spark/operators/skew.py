@@ -80,7 +80,8 @@ def salted_join(
     its salt.
 
     The salt MUST NOT be a function of the join key alone — round 4's
-    measured skew harness (scripts/stress_10x.py --skew) caught exactly
+    measured skew harness (a since-deleted stress script; output
+    equality is gated in tests/test_scale_ops.py) caught exactly
     that bug here: pmod(hash(join_key)) gives every row of a hot key
     the SAME salt, so the hot key still lands on one reducer and the
     "salted" join straggles identically to the plain one. Hashing all

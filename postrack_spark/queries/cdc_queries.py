@@ -544,7 +544,8 @@ def cdc_sequence_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the four counters. Duplicate-LSN detection needs an lsn-keyed
     # shuffle, so it stays a second pass — column-pruned to the lsn
     # alone (no envelope map is ever built on that branch).
-    ev = ch.select(key.alias("k"), "lsn", "op")
+    # Keyless envelopes (TRUNCATE) carry no per-key history to certify.
+    ev = ch.select(key.alias("k"), "lsn", "op").filter(F.col("k").isNotNull())
     w = Window.partitionBy("k")
     ev2 = ev.select(
         "k",

@@ -470,13 +470,16 @@ def test_pin_small_concurrent_registry_safe(spark, sf_dir):
     thread constructs a query). Hammer it from 8 threads with colliding
     and distinct names past the LRU cap: no ValueError from racing
     remove/pop, and the registry stays internally consistent (order list
-    matches the dict, size within the cap)."""
+    matches the dict, size within the cap). The toy pins are released at
+    the end so later tests in the shared session start without them."""
     import threading
 
     from postrack_spark import session as S
 
     t = load_tables(spark, sf_dir)
     errors: list[BaseException] = []
+    with S._PIN_LOCK:
+        before = set(S._PINNED_SMALL)
 
     def worker(tid: int) -> None:
         try:
@@ -487,15 +490,22 @@ def test_pin_small_concurrent_registry_safe(spark, sf_dir):
         except BaseException as ex:  # noqa: BLE001 — collect to re-raise
             errors.append(ex)
 
-    threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert not errors, errors
-    with S._PIN_LOCK:
-        assert len(S._PINNED_ORDER) <= S._PINNED_MAX
-        assert sorted(S._PINNED_ORDER) == sorted(S._PINNED_SMALL.keys())
+    try:
+        threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+        assert not errors, errors
+        with S._PIN_LOCK:
+            assert len(S._PINNED_ORDER) <= S._PINNED_MAX
+            assert sorted(S._PINNED_ORDER) == sorted(S._PINNED_SMALL.keys())
+    finally:
+        with S._PIN_LOCK:
+            added = {n: S._PINNED_SMALL.pop(n) for n in set(S._PINNED_SMALL) - before}
+            S._PINNED_ORDER[:] = [n for n in S._PINNED_ORDER if n not in added]
+        for df in added.values():
+            df.unpersist()
 
 
 def test_ivf_assign_unique_id_contract(spark):
