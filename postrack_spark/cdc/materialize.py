@@ -6,12 +6,15 @@ row_number() over (partition by pk order by lsn desc) = 1, then drop
 DELETE images. The reference leaves this entirely to the user callback
 (postrack.go:35); here it is a first-class, scale-aware operator.
 
-Scale: one shuffle on the key; at 100 TB this runs incrementally inside
-foreachBatch (compact the micro-batch first, then MERGE into the base
-table) — see postrack_spark.streaming. TRUNCATE is an epoch barrier:
-rows with lsn <= the table's latest TRUNCATE lsn are discarded before
-per-key compaction, which prunes early (map-side filter after a tiny
-broadcast of per-table truncate watermarks).
+Scale: one source scan, one compaction shuffle on the key and one
+shuffle of the compacted rows for the TRUNCATE watermark; at 100 TB
+this runs incrementally inside foreachBatch (the sink folds the base
+table into the same `apply_changes` call) — see
+postrack_spark.streaming. TRUNCATE is an epoch barrier: a key whose
+latest event is at or before its table's latest TRUNCATE lsn is
+discarded. The watermark is one more aggregate of the same compaction
+(TRUNCATE events are copied into every hash bucket of their table), so
+the source is decoded once per action.
 """
 
 from __future__ import annotations
@@ -49,15 +52,6 @@ def latest_per_key(changes: DataFrame, key_cols: list, order_col: str = "lsn") -
             F.col(c) if c in key_cols else F.col(f"__latest.{c}").alias(c)
             for c in changes.columns
         ]
-    )
-
-
-def truncate_watermarks(changes: DataFrame) -> DataFrame:
-    """Per-table high-water LSN of TRUNCATE events (empty if none)."""
-    return (
-        changes.filter(F.col("op") == TRUNCATE)
-        .groupBy("schema", "table")
-        .agg(F.max("lsn").alias("__trunc_lsn"))
     )
 
 
@@ -107,66 +101,74 @@ def apply_changes(changes: DataFrame, key_expr, key_name: str = "__key") -> Data
     """Replay a change stream into its final state.
 
     1. latest event per (schema, table, key) — TRUNCATE events ride
-       along with a NULL key, so each table's truncates collapse into
-       one group whose survivor IS the high-water TRUNCATE
+       along with a NULL key
     2. drop keys whose surviving event is at or before the table's
        last TRUNCATE, and keys whose final event is DELETE
 
-    Filtering pre-TRUNCATE events BEFORE compaction is equivalent to
-    compacting first and filtering after (pgoutput events carry full
-    row images, so a key's state is its latest event alone: if that
-    event postdates the truncate the key was re-created and survives;
-    if not, the key was wiped).
+    Dropping a key whose latest event predates the TRUNCATE equals
+    dropping every pre-TRUNCATE event before compaction: pgoutput
+    events carry full row images, so a key's state is its latest event
+    alone (if that event postdates the truncate the key was re-created
+    and survives; if not, the key was wiped).
 
     `key_expr` extracts the primary key from an envelope row (typically
     ``typed_column("after", pk, t)`` coalesced with the before image,
     since DELETE events carry only `before` — postrack.go:399-406).
 
-    Physical shape (optimization round 8): the watermark branch is
-    derived PRE-compaction from the null-key rows alone and the
-    pre-truncate filter runs map-side BEFORE the compaction shuffle.
-    The previous shape filtered `latest` for TRUNCATE survivors, which
-    *claimed* to share the compaction exchange — but the executed plan
-    (AQE on or off, Spark 4.1) never reuses it: the watermark branch
-    re-ran the full scan → envelope build → shuffle → max_by chain
-    (measured 120 vs 77 tasks, ~1.9× wall at sf0.1). The new branch is
-    column-pruned at the scan (op/lsn/schema/table + key columns, no
-    image maps survive SimplifyExtractValueOps) and shuffles only
-    null-key rows — at 100 TB that is a cheap metadata-width pass, and
-    the main shuffle additionally drops all pre-truncate events.
+    Physical shape: ONE scan of `changes`. Every row event gets a bucket ``pmod(xxhash64(key), n)`` and every
+    TRUNCATE is copied into all n buckets of its table (n is
+    ``spark.sql.shuffle.partitions``; the result does not depend on
+    it). The compaction groups by (schema, table, bucket, key) with
+    map-side partial aggregation and computes two aggregates: the
+    max_by survivor and the group's max TRUNCATE lsn. A window max over
+    (schema, table, bucket) then hands each bucket its table's
+    watermark — the second exchange moves compacted rows only, spread
+    over n buckets instead of one task per table. A separate watermark
+    branch would re-decode the whole source: Spark never reuses an
+    exchange over a Python DataSource scan, and filter push-down into
+    `postgres_cdc` is unsafe (see its module docstring).
 
-    Equivalence with the compact-then-filter form (both directions are
-    also asserted by the oracle-gated TRUNCATE queries):
-    - watermark: the previous form filtered the compaction's NULL-key
-      group survivor to TRUNCATE; on well-formed envelopes (INSERT/
-      UPDATE carry ``after``, DELETE carries ``before`` — the
-      reference's own contract, postrack.go:368-406) that group holds
-      ONLY TRUNCATE events, so its survivor is the max-lsn TRUNCATE —
-      exactly :func:`truncate_watermarks`. The only divergence is a
-      malformed non-TRUNCATE event with a NULL key outranking every
-      TRUNCATE (it used to suppress the watermark); key extraction on
-      such a stream is already undefined. Deriving the watermark with
-      the op filter lets column pruning drop the image maps from the
-      branch entirely (the key-null form must evaluate ``key_expr``,
-      which rebuilds both maps per row under the CASE the map sits in).
-    - main branch: a key's post-filter survivor is its max-lsn event
-      > watermark; pre-filtering events <= watermark cannot change the
-      max of what remains (pgoutput events carry full images, so the
-      survivor alone is the state). TRUNCATE rows themselves never
-      reach the output in either form (all have lsn <= watermark when
-      one survives; the op != TRUNCATE filter covers the rest).
+    NULL keys: a malformed row event whose key extracts to NULL
+    compacts with its table's TRUNCATEs in one bucket, but the
+    watermark is its own aggregate, so it cannot hide a TRUNCATE; it
+    survives (as a NULL-key row) only if it is newer than the table's
+    last TRUNCATE.
     """
-    keyed = changes.withColumn(
-        key_name, F.when(F.col("op") != TRUNCATE, key_expr)
+    from pyspark.sql import Window
+
+    n = int(changes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    is_trunc = F.col("op") == TRUNCATE
+    keyed = changes.withColumn(key_name, F.when(~is_trunc, key_expr))
+    group = ["schema", "table", "__b", key_name]
+    others = [c for c in keyed.columns if c not in group]
+    bucket = F.explode(
+        F.when(is_trunc, F.sequence(F.lit(0), F.lit(n - 1))).otherwise(
+            F.array(F.pmod(F.xxhash64(F.col(key_name)), F.lit(n)).cast("int"))
+        )
     )
-    trunc = truncate_watermarks(changes)
-    live = (
-        keyed.join(F.broadcast(trunc), ["schema", "table"], "left")
-        .filter(F.col("__trunc_lsn").isNull() | (F.col("lsn") > F.col("__trunc_lsn")))
-        .drop("__trunc_lsn")
+    compacted = (
+        keyed.withColumn("__b", bucket)
+        .groupBy(*group)
+        .agg(
+            F.max_by(F.struct(*others), F.col("lsn")).alias("__latest"),
+            F.max(F.when(is_trunc, F.col("lsn"))).alias("__t"),
+        )
     )
-    latest = latest_per_key(live, ["schema", "table", key_name])
-    return latest.filter(F.col("op") != TRUNCATE).filter(F.col("op") != DELETE)
+    mark = F.max("__t").over(Window.partitionBy("schema", "table", "__b"))
+    return (
+        compacted.withColumn("__w", mark)
+        .filter(F.col("__w").isNull() | (F.col("__latest.lsn") > F.col("__w")))
+        .filter(~F.col("__latest.op").isin(TRUNCATE, DELETE))
+        .select(  # the column order of the former join on (schema, table)
+            "schema",
+            "table",
+            *[
+                F.col(c) if c == key_name else F.col(f"__latest.{c}").alias(c)
+                for c in keyed.columns
+                if c not in ("schema", "table")
+            ],
+        )
+    )
 
 
 def resolve_unchanged(

@@ -22,6 +22,22 @@ the Spark form of the reference's lsn+1 restart (postrack.go:297).
 commit() appends the acked offset to an ack log — the keepAlive
 StandbyStatusUpdate analog (postrack.go:107-117) but issued only after
 the micro-batch is durably checkpointed (fixes race q3).
+
+Hand-off: both readers' ``read`` yield one ``pyarrow.RecordBatch`` per
+capture file (see ``_decode_files``), so rows cross to the JVM as Arrow
+columns instead of through PySpark's per-field tuple converters.
+
+No ``pushFilters``: the reader always decodes every admitted event, and
+``apply_changes`` scans it once per action instead. Push-down would be
+unsafe on Spark 4.1.2 for two reasons. (a) ``PythonDataSourceV2`` keeps
+one read plan per loaded relation, so every scan of one DataFrame gets
+the reader pushed by its first scan, and two differently-filtered scans
+of one DataFrame (say, in a union) lose rows. (b) A reader that implements ``pushFilters`` raises
+``DATA_SOURCE_PUSHDOWN_DISABLED`` in any session without
+``spark.sql.python.filterPushdown.enabled``; ``session.get_spark``
+does not set it (only ``configure_session`` does).
+``pydelta`` (sources.lakehouse_ds) does prune files from pushed
+filters and carries defect (a).
 """
 
 from __future__ import annotations
@@ -85,21 +101,32 @@ def _capture_files(capture_dir: str) -> list[str]:
 
 
 def _decode_files(capture_dir: str, names: list[str], events: set[str], start_lsn: int):
+    """Yield one ``pyarrow.RecordBatch`` per capture file, holding its
+    admitted events (op in `events`, lsn > `start_lsn`); a file that
+    admits none yields nothing. Built column-wise against the Arrow form
+    of CHANGE_SCHEMA: the decoder's image dicts become map values as
+    they are (``{}`` stays an empty map, None stays NULL) and its
+    UTC-aware commit times become ``timestamp[us, tz=UTC]``.
+
+    pyarrow is imported here, not at module level: the capture daemon
+    imports this module for the frame-file helpers and never reads."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(CHANGE_SCHEMA)
     state = DecoderState()
     for name in names:
         frames = read_frame_file(os.path.join(capture_dir, name))
-        for row in decode_xlogdata_stream(frames, state):
-            if row["op"] in events and row["lsn"] > start_lsn:
-                yield (
-                    row["lsn"],
-                    row["txid"],
-                    row["commit_ts"],
-                    row["schema"],
-                    row["table"],
-                    row["op"],
-                    row["after"],
-                    row["before"],
-                )
+        rows = [
+            row
+            for row in decode_xlogdata_stream(frames, state)
+            if row["op"] in events and row["lsn"] > start_lsn
+        ]
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([row[f.name] for row in rows], type=f.type) for f in schema],
+                schema=schema,
+            )
 
 
 class _Options:

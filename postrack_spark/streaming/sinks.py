@@ -48,8 +48,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from postrack_spark.cdc.envelope import DELETE, TRUNCATE
-from postrack_spark.cdc.materialize import latest_per_key, truncate_watermarks
+from postrack_spark.cdc.envelope import TRUNCATE
+from postrack_spark.cdc.materialize import apply_changes
 
 _POINTER = "_CURRENT"
 
@@ -152,11 +152,12 @@ def foreach_batch_apply_changes(
     """Incrementally materialize a CDC stream into a parquet view.
 
     Per micro-batch (the compact-then-merge pattern, SURVEY.md §4.3):
-      1. compact the batch: latest event per key within the batch,
-         KEEPING delete tombstones (they must out-compete base rows)
-      2. apply the batch's TRUNCATE watermarks to the base (epoch cut)
-      3. merge base ∪ compacted via latest-per-key, then drop deletes
-      4. commit as a fresh version + atomic pointer swap (see module
+      1. replay base ∪ batch through :func:`apply_changes` — the base
+         rows are the view's live events (key column dropped and
+         re-derived), so the batch's DELETE tombstones and TRUNCATE
+         watermarks cut the base exactly as they cut the batch, and the
+         batch is decoded once (one compaction, no watermark branch)
+      2. commit as a fresh version + atomic pointer swap (see module
          docstring — replayed batches are skipped, base never
          overwritten in place)
 
@@ -168,32 +169,16 @@ def foreach_batch_apply_changes(
     checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_apply_")
 
     def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        trunc = truncate_watermarks(batch_df)
-        keyed = (
-            batch_df.filter(F.col("op") != TRUNCATE)
-            .withColumn(key_name, key_expr)
-            .join(F.broadcast(trunc), ["schema", "table"], "left")
-            .filter(F.col("__trunc_lsn").isNull() | (F.col("lsn") > F.col("__trunc_lsn")))
-            .drop("__trunc_lsn")
+        if base is None:
+            return apply_changes(batch_df, key_expr, key_name)
+        if set(base.columns) != {*batch_df.columns, key_name}:
+            raise ValueError(
+                f"view schema drift under {target}: "
+                f"base={sorted(base.columns)} batch={sorted({*batch_df.columns, key_name})}"
+            )
+        return apply_changes(
+            base.drop(key_name).unionByName(batch_df), key_expr, key_name
         )
-        compacted = latest_per_key(keyed, ["schema", "table", key_name])
-        if base is not None:
-            if set(base.columns) != set(compacted.columns):
-                raise ValueError(
-                    f"view schema drift under {target}: "
-                    f"base={sorted(base.columns)} batch={sorted(compacted.columns)}"
-                )
-            base = (
-                base.join(F.broadcast(trunc), ["schema", "table"], "left")
-                .filter(F.col("__trunc_lsn").isNull() | (F.col("lsn") > F.col("__trunc_lsn")))
-                .drop("__trunc_lsn")
-            )
-            merged = latest_per_key(
-                base.unionByName(compacted), ["schema", "table", key_name]
-            )
-        else:
-            merged = compacted
-        return merged.filter(F.col("op") != DELETE)
 
     query = (
         changes_stream.writeStream.foreachBatch(

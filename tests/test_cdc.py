@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pytest
 from pyspark.sql import functions as F
 
 from postrack_spark.cdc import (
@@ -209,27 +212,124 @@ def test_recover_before_fills_empty_update_images(spark, sf_dir):
     assert untouched <= still  # empties were filled, none were emptied
 
 
+@contextmanager
+def _shuffle_partitions(spark, n: int):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_apply_changes_is_delivery_order_invariant(spark, sf_dir):
     """Materialization must not depend on DELIVERY order, only on LSN
     (real capture pipelines reorder across partitions): applying the
     stream repartitioned by an order-destroying hash yields the exact
-    same final state. Holds because latest_per_key reduces with max_by
-    over the LSN — a commutative/associative fold."""
+    same final state. Holds because the compaction reduces with max_by
+    over the LSN — a commutative/associative fold. Nor may it depend on
+    the shuffle partition count, which sets apply_changes' bucket
+    count."""
     ch = orders_changes(spark, sf_dir)
     key = F.coalesce(
         typed_column("after", "o_orderkey", "long"),
         typed_column("before", "o_orderkey", "long"),
     )
     shuffled = ch.repartition(17, F.md5(F.col("lsn").cast("string")))
-    a = {
-        r["o_orderkey"]: r["after"]
-        for r in apply_changes(ch, key, key_name="o_orderkey").collect()
+
+    def final(changes):
+        return {
+            r["o_orderkey"]: r["after"]
+            for r in apply_changes(changes, key, key_name="o_orderkey").collect()
+        }
+
+    a = final(ch)
+    with _shuffle_partitions(spark, 7):
+        b = final(shuffled)
+    with _shuffle_partitions(spark, 1):
+        c = final(ch)
+    assert a == b == c and a
+
+
+def _ev(lsn: int, table: str, op: str, k: int | None = None, v: str | None = None):
+    """One envelope row: row images carry (id, v); UPDATEs have the
+    default-identity empty before image, TRUNCATEs no image."""
+    img = None if k is None else {"id": str(k), "v": v}
+    after = img if op in ("INSERT", "UPDATE") else None
+    before = img if op == "DELETE" else ({} if op == "UPDATE" else None)
+    return (lsn, 1, None, "public", table, op, after, before)
+
+
+def _mixed_stream() -> list[tuple]:
+    """Two tables: `b` truncated once, `a` twice. b.1 is re-created
+    after its TRUNCATE, a.3 is created between a's TRUNCATEs (and so
+    wiped), a.5 and b.3 end in DELETE, and a.10-a.49 spread the live
+    keys over several hash buckets."""
+    evs = [
+        _ev(1, "a", "INSERT", 1, "a1"), _ev(2, "a", "INSERT", 2, "a2"),
+        _ev(3, "b", "INSERT", 1, "b1"), _ev(4, "b", "INSERT", 2, "b2"),
+        _ev(5, "a", "UPDATE", 1, "a1'"), _ev(6, "b", "TRUNCATE"),
+        _ev(7, "a", "TRUNCATE"), _ev(8, "b", "INSERT", 1, "b1 again"),
+        _ev(9, "a", "INSERT", 3, "a3"), _ev(10, "a", "TRUNCATE"),
+        _ev(11, "a", "INSERT", 5, "a5"), _ev(12, "b", "INSERT", 3, "b3"),
+        _ev(13, "a", "DELETE", 5, "a5"), _ev(14, "b", "DELETE", 3, "b3"),
+    ]
+    lsn = 100
+    for k in range(10, 50):
+        evs.append(_ev(lsn, "a", "INSERT", k, f"a{k}"))
+        if k % 3 == 0:
+            evs.append(_ev(lsn + 1, "a", "UPDATE", k, f"a{k}'"))
+        if k % 5 == 0:
+            evs.append(_ev(lsn + 2, "a", "DELETE", k, f"a{k}'"))
+        lsn += 3
+    return evs
+
+
+_STREAMS = {
+    "mixed": _mixed_stream,
+    "truncate_only": lambda: [_ev(1, "a", "TRUNCATE"), _ev(2, "b", "TRUNCATE"),
+                              _ev(3, "a", "TRUNCATE")],
+    "empty": lambda: [],
+}
+
+
+def _model_apply(events: list[tuple]) -> dict:
+    """Python model of apply_changes: a key's latest event survives if
+    it is newer than its table's last TRUNCATE and is not a DELETE."""
+    mark: dict = {}
+    last: dict = {}
+    for lsn, _tx, _ts, schema, table, op, after, before in sorted(events):
+        if op == "TRUNCATE":
+            mark[(schema, table)] = lsn
+        else:
+            last[(schema, table, int((after or before)["id"]))] = (lsn, op, after)
+    return {
+        k: v for k, v in last.items()
+        if v[1] != "DELETE" and v[0] > mark.get(k[:2], -1)
     }
-    b = {
-        r["o_orderkey"]: r["after"]
-        for r in apply_changes(shuffled, key, key_name="o_orderkey").collect()
-    }
-    assert a == b
+
+
+@pytest.mark.parametrize("parts", [1, 7])
+@pytest.mark.parametrize("stream", sorted(_STREAMS))
+def test_apply_changes_matches_model_under_partition_counts(spark, stream, parts):
+    """TRUNCATE epochs per table, re-creation after a TRUNCATE, final
+    DELETEs, TRUNCATE-only and empty streams: apply_changes equals the
+    Python model whatever the shuffle partition (= bucket) count."""
+    events = _STREAMS[stream]()
+    key = F.coalesce(
+        typed_column("after", "id", "long"), typed_column("before", "id", "long")
+    )
+    with _shuffle_partitions(spark, parts):
+        out = apply_changes(spark.createDataFrame(events, CHANGE_SCHEMA), key, "k")
+        rows = out.collect()
+    assert out.columns == [
+        "schema", "table", "lsn", "txid", "commit_ts", "op", "after", "before", "k"
+    ]
+    got = {(r["schema"], r["table"], r["k"]): (r["lsn"], r["op"], r["after"]) for r in rows}
+    assert len(got) == len(rows)
+    assert got == _model_apply(events)
+    if stream == "mixed":
+        assert ("public", "b", 1) in got and ("public", "a", 3) not in got
 
 
 def test_incremental_join_agg_equals_recompute(spark, sf_dir):

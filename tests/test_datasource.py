@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from postrack_spark.streaming.sinks import read_view
@@ -17,8 +18,11 @@ from tests.test_pgoutput import ORDERS_COLS, TS, golden_frames
 from postrack_spark.sources.pgoutput import (
     encode_begin,
     encode_commit,
+    encode_delete,
     encode_insert,
     encode_relation,
+    encode_truncate,
+    encode_update,
     wrap_xlogdata,
 )
 
@@ -36,6 +40,18 @@ def _more_inserts(start_lsn: int, keys: list[int]) -> list[bytes]:
         frames.append(wrap_xlogdata(encode_insert(101, [str(k), "O", "50.0"]), start_lsn + 1 + i))
     frames.append(wrap_xlogdata(encode_commit(start_lsn + 99, start_lsn + 99, TS), start_lsn + 99))
     return frames
+
+
+def _orders_key():
+    return F.coalesce(
+        typed_column("after", "o_orderkey", "long"),
+        typed_column("before", "o_orderkey", "long"),
+    )
+
+
+def _postgres_cdc_scans(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(1 for ln in plan.splitlines() if "BatchScan postgres_cdc" in ln)
 
 
 def test_batch_read(spark):
@@ -119,17 +135,17 @@ def test_bootstrap_foreachbatch(spark):
 
 def test_datasource_to_materialization(spark):
     """Decode -> typed projection -> latest-per-key materialization over
-    the golden stream: key 1 deleted, key 2 survives."""
+    the golden stream: key 1 deleted, key 2 survives. The action decodes
+    the capture once: its plan has a single postgres_cdc scan (the
+    TRUNCATE watermark is an aggregate of the same compaction, not a
+    second branch)."""
     d = _capture_dir_with_golden()
     register(spark)
     df = spark.read.format("postgres_cdc").option("capture_dir", d).load()
     from postrack_spark.cdc import apply_changes
 
-    key = F.coalesce(
-        typed_column("after", "o_orderkey", "long"),
-        typed_column("before", "o_orderkey", "long"),
-    )
-    final = apply_changes(df, key, key_name="o_orderkey")
+    final = apply_changes(df, _orders_key(), key_name="o_orderkey")
+    assert _postgres_cdc_scans(final) == 1
     rows = final.orderBy("o_orderkey").collect()
     assert [r["o_orderkey"] for r in rows] == [2]
 
@@ -308,3 +324,131 @@ def test_scd2_history_via_conn(spark):
         (1, 14, 16, "F"),
         (2, 15, None, "O"),
     ]
+
+
+def _non_ascii_frames(lsn: int) -> list[bytes]:
+    return [
+        wrap_xlogdata(encode_relation(101, "public", "orders", ORDERS_COLS), lsn),
+        wrap_xlogdata(encode_begin(lsn, TS, 901), lsn),
+        wrap_xlogdata(encode_insert(101, ["7", "Ø", "ユニコード €"]), lsn + 1),
+        wrap_xlogdata(encode_update(101, ["7", "ß", None], ["7", "Ø", "ユニコード €"]), lsn + 2),
+        wrap_xlogdata(encode_commit(lsn + 3, lsn + 3, TS), lsn + 3),
+    ]
+
+
+def _truncate_only_frames(lsn: int) -> list[bytes]:
+    return [
+        wrap_xlogdata(encode_relation(102, "public", "scratch", ["x"]), lsn),
+        wrap_xlogdata(encode_begin(lsn, TS, 902), lsn),
+        wrap_xlogdata(encode_truncate([102]), lsn + 1),
+        wrap_xlogdata(encode_commit(lsn + 2, lsn + 2, TS), lsn + 2),
+    ]
+
+
+def _decoded_rows(d: str, events: set, start_lsn: int) -> list[tuple]:
+    """What the decoder itself yields per capture file (one decoder
+    state per file, as one read partition holds one file)."""
+    from datetime import datetime, timedelta, timezone
+
+    from postrack_spark.sources.pgoutput import DecoderState, decode_xlogdata_stream
+    from postrack_spark.sources.postgres_cdc import read_frame_file
+
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    out = []
+    for name in sorted(n for n in os.listdir(d) if n.endswith(".pgout")):
+        for r in decode_xlogdata_stream(read_frame_file(os.path.join(d, name)), DecoderState()):
+            if r["op"] in events and r["lsn"] > start_lsn:
+                ts = r["commit_ts"]
+                micros = None if ts is None else (ts - epoch) // timedelta(microseconds=1)
+                out.append((r["lsn"], r["txid"], micros, r["schema"], r["table"], r["op"],
+                            r["after"], r["before"]))
+    return sorted(out, key=lambda t: t[0])
+
+
+def _spark_rows(df) -> list[tuple]:
+    cols = ["lsn", "txid", F.unix_micros("commit_ts"), "schema", "table", "op",
+            "after", "before"]
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=lambda t: t[0])
+
+
+@pytest.mark.parametrize("layout", ["full", "empty_dir"])
+@pytest.mark.parametrize("options", [{}, {"events": "INSERT,UPDATE,DELETE", "start_lsn": "12"}])
+def test_arrow_handoff_equals_decoder_rows(spark, tmp_path, layout, options):
+    """The Arrow batches both readers hand to the JVM carry exactly the
+    decoder's rows: NULL values, the UNCHANGED sentinel, the EMPTY
+    before image of a default-identity UPDATE (not NULL), DELETE and
+    TRUNCATE images, non-ASCII text and commit_ts — under the events /
+    start_lsn options, with a file whose rows are all filtered out
+    (under the options) and over an empty capture dir."""
+    d = str(tmp_path / "capture")
+    os.makedirs(d)
+    if layout == "full":
+        write_frame_file(os.path.join(d, "000001.pgout"), golden_frames())
+        write_frame_file(os.path.join(d, "000002.pgout"), _non_ascii_frames(200))
+        write_frame_file(os.path.join(d, "000003.pgout"), _truncate_only_frames(300))
+    events = {e.strip() for e in options.get("events", "INSERT,UPDATE,DELETE,TRUNCATE").split(",")}
+    want = _decoded_rows(d, events, int(options.get("start_lsn", "0")))
+    if layout == "full":
+        ops = {t[5] for t in want}
+        assert ops == events and len(want) >= 4
+        assert any(t[7] == {} for t in want)  # default-identity UPDATE
+    register(spark)
+
+    batch = spark.read.format("postgres_cdc").option("capture_dir", d).options(**options).load()
+    assert _spark_rows(batch) == want
+
+    seen: list[tuple] = []
+    stream = spark.readStream.format("postgres_cdc").option("capture_dir", d).options(**options).load()
+    q = (
+        stream.writeStream.foreachBatch(lambda df, _bid: seen.extend(_spark_rows(df)))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert sorted(seen, key=lambda t: t[0]) == want
+
+
+def test_sink_truncate_mid_stream_equals_batch_apply(spark, tmp_path):
+    """foreach_batch_apply_changes over three capture files, one per
+    micro-batch, with a TRUNCATE in the second: the view equals
+    apply_changes over the whole capture dir."""
+    from postrack_spark.cdc import apply_changes
+    from postrack_spark.streaming.sinks import foreach_batch_apply_changes
+
+    def txn(lsn, *msgs):
+        return [
+            wrap_xlogdata(encode_relation(101, "public", "orders", ORDERS_COLS), lsn),
+            wrap_xlogdata(encode_begin(lsn, TS, lsn), lsn),
+            *[wrap_xlogdata(m, lsn + 1 + i) for i, m in enumerate(msgs)],
+            wrap_xlogdata(encode_commit(lsn + 50, lsn + 50, TS), lsn + 50),
+        ]
+
+    d = str(tmp_path / "capture")
+    os.makedirs(d)
+    write_frame_file(os.path.join(d, "000001.pgout"), txn(
+        100, *[encode_insert(101, [str(k), "O", "1.0"]) for k in (1, 2, 3)]))
+    write_frame_file(os.path.join(d, "000002.pgout"), txn(
+        200, encode_update(101, ["2", "F", "2.0"]), encode_truncate([101]),
+        encode_insert(101, ["6", "O", "6.0"]), encode_insert(101, ["7", "O", "7.0"])))
+    write_frame_file(os.path.join(d, "000003.pgout"), txn(
+        300, encode_delete(101, ["7", "O", "7.0"]), encode_update(101, ["6", "F", "6.5"])))
+    register(spark)
+    target, ckpt = str(tmp_path / "view"), str(tmp_path / "ckpt")
+    for _ in range(3):
+        stream = (
+            spark.readStream.format("postgres_cdc").option("capture_dir", d)
+            .option("maxFilesPerTrigger", "1").load()
+        )
+        _, q = foreach_batch_apply_changes(
+            stream, _orders_key(), target_dir=target, key_name="o_orderkey",
+            checkpoint_dir=ckpt,
+        )
+        q.awaitTermination(120)
+    whole = spark.read.format("postgres_cdc").option("capture_dir", d).load()
+    want = apply_changes(whole, _orders_key(), key_name="o_orderkey")
+
+    def image(df):
+        return sorted((r["o_orderkey"], r["lsn"], r["after"]["o_totalprice"]) for r in df.collect())
+
+    assert image(read_view(spark, target)) == image(want) == [(6, 302, "6.5")]

@@ -163,9 +163,12 @@ def test_layout_queries_single_scan_lanes(spark, qs):
 def test_version_diff_key_partitioned_join(spark, qs):
     """cdc_version_diff's two time-travel states meet in ONE key
     equi-join (SMJ/SHJ, never a nested loop over states) with no
-    Python and no windows."""
+    Python. Its only windows are the two states' apply_changes TRUNCATE
+    watermarks, each partitioned by (schema, table, bucket); the diff
+    itself adds none."""
     feats = assert_plan(
-        _df(qs, "cdc_version_diff", spark), python_evals=0, windows=0
+        _df(qs, "cdc_version_diff", spark),
+        python_evals=0, windows=2, unpartitioned_windows=0,
     )
     assert feats["sortmerge_joins"] + feats["shuffledhash_joins"] >= 1
 
