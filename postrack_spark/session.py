@@ -49,6 +49,11 @@ def get_spark(app_name: str = "postrack-spark", cpus: int | None = None) -> Spar
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark 4.1 defaults this to true: every pyspark.sql.functions
+        # call then records its Python call site in the JVM (py4j round
+        # trips plus an inspect stack walk). Off, errors still carry
+        # their error class but no DataFrame call site.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,6 +20,12 @@ Emitted envelope matches cdc.envelope.CHANGE_SCHEMA keys. Values are
 text-encoded (map[string]string), exactly the reference's data model
 (postrack.go:35); None marks SQL NULL, UNCHANGED marks a TOASTed
 column not present in the new image.
+
+``decode_xlogdata_stream`` is the reference decoder: one envelope dict
+per row change. The Kafka transport and the capture tests use it as is.
+``postgres_cdc``'s read path decodes its hot messages straight into
+Arrow columns and hands every other frame to it; tests require both to
+give the same rows.
 """
 
 from __future__ import annotations

@@ -32,6 +32,11 @@ import struct
 import time
 
 
+_RECV_SIZE = 65536
+_UNPACK_I = struct.Struct(">i").unpack_from
+_MESSAGE_TYPES = [bytes((b,)) for b in range(256)]  # type byte -> bytes, no slice per message
+
+
 class PgError(RuntimeError):
     """Server ErrorResponse, with the severity/code/message fields."""
 
@@ -67,7 +72,9 @@ class PgWireConnection:
                  replication: bool = False, connect_timeout: float = 10.0):
         self.sock = socket.create_connection((host, port), timeout=connect_timeout)
         self.sock.settimeout(None)
-        self._buf = b""
+        # received bytes; those before _pos are consumed
+        self._buf = bytearray()
+        self._pos = 0
         self._copy_both = False
         params = {
             "user": user,
@@ -101,14 +108,14 @@ class PgWireConnection:
     # -- low-level framing -------------------------------------------
 
     def _fill(self, n: int, deadline: float | None) -> bool:
-        """Grow the receive buffer to >= n bytes WITHOUT consuming.
-        Returns False when the deadline passes first — the partial
-        bytes stay buffered so a later call resumes mid-message.
+        """Buffer >= n unconsumed bytes (from ``_pos``) WITHOUT
+        consuming. Returns False when the deadline passes first — the
+        partial bytes stay buffered so a later call resumes mid-message.
         ADVICE r4 (low): the old code only applied the select() wait
         while the buffer was EMPTY; once a partial header was buffered,
         sock.recv blocked indefinitely on a stalled server and the
         daemon's stop() flag (SIGTERM) was never rechecked."""
-        while len(self._buf) < n:
+        while len(self._buf) - self._pos < n:
             if deadline is not None:
                 remaining = deadline - time.monotonic()
                 if remaining <= 0:
@@ -116,20 +123,16 @@ class PgWireConnection:
                 r, _, _ = select.select([self.sock], [], [], remaining)
                 if not r:
                     return False
-            chunk = self.sock.recv(65536)
+            chunk = self.sock.recv(_RECV_SIZE)
             if not chunk:
                 raise PgError({"S": "FATAL", "M": "server closed connection"})
+            if self._pos >= _RECV_SIZE:
+                # drop the consumed prefix once per large read, not the
+                # unconsumed remainder once per message
+                del self._buf[: self._pos]
+                self._pos = 0
             self._buf += chunk
         return True
-
-    def _recv_exact(self, n: int, timeout: float | None = None) -> bytes | None:
-        """Read exactly n bytes; with a timeout, return None (consuming
-        nothing) when they don't all arrive before it elapses."""
-        deadline = time.monotonic() + timeout if timeout is not None else None
-        if not self._fill(n, deadline):
-            return None
-        out, self._buf = self._buf[:n], self._buf[n:]
-        return out
 
     def _recv_message(self, timeout: float | None = None) -> tuple[bytes, bytes] | tuple[None, None]:
         # One deadline spans header + payload, and NOTHING is consumed
@@ -138,12 +141,17 @@ class PgWireConnection:
         deadline = time.monotonic() + timeout if timeout is not None else None
         if not self._fill(5, deadline):
             return None, None
-        (length,) = struct.unpack(">i", self._buf[1:5])
+        (length,) = _UNPACK_I(self._buf, self._pos + 1)
         total = 5 + (length - 4 if length > 4 else 0)
         if not self._fill(total, deadline):
             return None, None
-        head, self._buf = self._buf[:total], self._buf[total:]
-        return head[:1], head[5:]
+        buf, start = self._buf, self._pos  # after _fill, which may compact
+        mtype, payload = _MESSAGE_TYPES[buf[start]], bytes(buf[start + 5 : start + total])
+        self._pos = start + total
+        if self._pos == len(buf):
+            buf.clear()
+            self._pos = 0
+        return mtype, payload
 
     def _send_message(self, mtype: bytes, payload: bytes) -> None:
         self.sock.sendall(mtype + struct.pack(">i", len(payload) + 4) + payload)

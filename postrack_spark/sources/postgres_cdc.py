@@ -25,7 +25,16 @@ the micro-batch is durably checkpointed (fixes race q3).
 
 Hand-off: both readers' ``read`` yield one ``pyarrow.RecordBatch`` per
 capture file (see ``_decode_files``), so rows cross to the JVM as Arrow
-columns instead of through PySpark's per-field tuple converters.
+columns instead of through PySpark's per-field tuple converters. The
+batch is decoded column-wise (``_decode_frames``): Begin and the
+Insert/Update/Delete messages of plain transactions are appended
+straight into column lists, with no per-row dict, and the `events` /
+`start_lsn` filter runs before their images are built. Every other
+message (Relation, Commit, TRUNCATE, protocol v2 streaming, v3
+two-phase, Origin, Type, Message), a tuple whose column count differs
+from its relation's and any frame the fast path cannot parse goes
+through the reference decoder, ``pgoutput.decode_xlogdata_stream``, and
+its rows land in the same columns.
 
 No ``pushFilters``: the reader always decodes every admitted event, and
 ``apply_changes`` scans it once per action instead. Push-down would be
@@ -45,6 +54,7 @@ from __future__ import annotations
 import json
 import os
 import struct
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -54,7 +64,14 @@ from pyspark.sql.datasource import (
 )
 
 from postrack_spark.cdc.envelope import CHANGE_SCHEMA
-from postrack_spark.sources.pgoutput import DecoderState, decode_xlogdata_stream
+from postrack_spark.sources.pgoutput import (
+    _UNPACK_I,
+    _UNPACK_QQI,
+    DecoderState,
+    _pg_ts,
+    _tuple_data,
+    decode_xlogdata_stream,
+)
 
 FRAME_FILE_SUFFIX = ".pgout"
 
@@ -100,33 +117,175 @@ def _capture_files(capture_dir: str) -> list[str]:
     )
 
 
-def _decode_files(capture_dir: str, names: list[str], events: set[str], start_lsn: int):
-    """Yield one ``pyarrow.RecordBatch`` per capture file, holding its
-    admitted events (op in `events`, lsn > `start_lsn`); a file that
-    admits none yields nothing. Built column-wise against the Arrow form
-    of CHANGE_SCHEMA: the decoder's image dicts become map values as
-    they are (``{}`` stays an empty map, None stays NULL) and its
-    UTC-aware commit times become ``timestamp[us, tz=UTC]``.
+# An XLogData frame is 'w', wal_start, wal_end and the send time, then
+# the pgoutput message: its tag byte at _MSG, its body after it.
+_MSG = 25
+_UNPACK_Q = struct.Struct(">q").unpack_from
+_ROW_OPS = {73: "INSERT", 85: "UPDATE", 68: "DELETE"}  # 'I', 'U', 'D'
+_UNIX_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_ONE_US = timedelta(microseconds=1)
 
-    pyarrow is imported here, not at module level: the capture daemon
-    imports this module for the frame-file helpers and never reads."""
+
+class _MapColumn:
+    """A ``map<string, string>`` column in Arrow's own layout: per row an
+    offset into one flat key list and one flat value list, and a
+    validity flag (a NULL image adds no entries)."""
+
+    __slots__ = ("offsets", "valid", "keys", "values")
+
+    def __init__(self) -> None:
+        self.offsets = [0]
+        self.valid: list[bool] = []
+        self.keys: list[str] = []
+        self.values: list[str | None] = []
+
+    def add(self, keys, values) -> None:
+        """One row's image; `values` None makes it NULL."""
+        self.valid.append(values is not None)
+        if values:
+            self.keys.extend(keys)
+            self.values.extend(values)
+        self.offsets.append(len(self.keys))
+
+    def to_arrow(self, pa, map_type):
+        # pa.Array.from_buffers, because MapArray.from_arrays (pyarrow
+        # 16) takes no validity mask
+        entries = pa.StructArray.from_arrays(
+            [pa.array(self.keys, pa.string()), pa.array(self.values, pa.string())],
+            fields=[map_type.key_field, map_type.item_field],
+        )
+        nulls = self.valid.count(False)
+        bitmap = pa.array(self.valid, pa.bool_()).buffers()[1] if nulls else None
+        return pa.Array.from_buffers(
+            map_type, len(self.valid),
+            [bitmap, pa.array(self.offsets, pa.int32()).buffers()[1]],
+            null_count=nulls, children=[entries],
+        )
+
+
+def _row_images(frame: bytes, op: str, relations: dict):
+    """(relation, new values, old values) of a plain Insert, Update or
+    Delete frame, with None for an absent image and an empty old image
+    for an Update without an old tuple; None when the frame needs the
+    reference decoder: an unknown relation, a body it cannot parse, or
+    a tuple whose column count differs from the relation's."""
+    try:
+        rel = relations[_UNPACK_I(frame, _MSG + 1)[0]]
+        off = _MSG + 5
+        marker = frame[off]
+        new = old = None
+        if op == "UPDATE":
+            old = ()
+            if marker == 75 or marker == 79:  # 'K' / 'O' old tuple
+                old, off = _tuple_data(frame, off + 1)
+                marker = frame[off]
+        elif op == "DELETE":
+            if marker != 75 and marker != 79:
+                return None
+            old, _ = _tuple_data(frame, off + 1)
+        if op != "DELETE":
+            if marker != 78:  # 'N' new tuple
+                return None
+            new, _ = _tuple_data(frame, off + 1)
+    except (KeyError, IndexError, struct.error, ValueError):
+        return None
+    n = len(rel.columns)
+    if (new is not None and len(new) != n) or (old and len(old) != n):
+        return None
+    return rel, new, old
+
+
+def _decode_frames(frames: list[bytes], state: DecoderState, events: set[str],
+                   start_lsn: int):
+    """One capture file's admitted events (op in `events`, lsn >
+    `start_lsn`) as one ``pyarrow.RecordBatch`` in the Arrow form of
+    CHANGE_SCHEMA, or None when it admits none.
+
+    Each event is appended straight into column lists; no per-row dict
+    is built on the hot path. Only the hot messages are decoded here:
+    Begin, and Insert, Update and Delete outside a stream segment or a
+    prepared transaction. Their `events` / `start_lsn` filter runs on
+    the frame header before any image is built, so a row message the
+    filter rejects is never decoded, and an error inside it is neither
+    raised nor counted. Every other frame goes through the reference
+    decoder, ``decode_xlogdata_stream``, one frame at a time: keepalives,
+    Relation, Commit, TRUNCATE, protocol v2 streaming and v3 two-phase
+    messages, Origin, Type, Message, a tuple whose column count differs
+    from its relation's, and any frame the fast path cannot parse. Its
+    rows land in the same columns, and it counts undecodable frames in
+    ``state.parse_errors``. So the rows are the reference's rows for the
+    same frames and filters, in the same order."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    lsns, txids, stamps, schemas, tables, ops = [], [], [], [], [], []
+    after, before = _MapColumn(), _MapColumn()
+    relations = state.relations
+    stamp_of = stamp = None  # the last state.commit_ts seen, in µs since 1970
+
+    for frame in frames:
+        tag = frame[_MSG] if len(frame) > _MSG and frame[0] == 119 else 0  # 'w'
+        if tag == 66 and len(frame) >= _MSG + 21:  # 'B' Begin: lsn, ts, xid
+            _final_lsn, ts, xid = _UNPACK_QQI(frame, _MSG + 1)
+            state.txid = xid
+            state.commit_ts = _pg_ts(ts)
+            continue
+        op = _ROW_OPS.get(tag)
+        if op is not None and state.in_stream is None and state.in_prepare is None:
+            (lsn,) = _UNPACK_Q(frame, 1)
+            if op not in events or lsn <= start_lsn:
+                continue
+            images = _row_images(frame, op, relations)
+            if images is not None:
+                rel, new, old = images
+                if state.commit_ts is not stamp_of:
+                    stamp_of = state.commit_ts
+                    stamp = None if stamp_of is None else (stamp_of - _UNIX_EPOCH) // _ONE_US
+                lsns.append(lsn)
+                txids.append(state.txid)
+                stamps.append(stamp)
+                schemas.append(rel.namespace)
+                tables.append(rel.name)
+                ops.append(op)
+                after.add(rel.columns, new)
+                before.add(rel.columns, old)
+                continue
+        for row in decode_xlogdata_stream([frame], state):
+            if row["op"] in events and row["lsn"] > start_lsn:
+                ts = row["commit_ts"]
+                lsns.append(row["lsn"])
+                txids.append(row["txid"])
+                stamps.append(None if ts is None else (ts - _UNIX_EPOCH) // _ONE_US)
+                schemas.append(row["schema"])
+                tables.append(row["table"])
+                ops.append(row["op"])
+                for image, col in ((row["after"], after), (row["before"], before)):
+                    col.add(image, None if image is None else image.values())
+    if not lsns:
+        return None
     schema = to_arrow_schema(CHANGE_SCHEMA)
+    scalars = [lsns, txids, stamps, schemas, tables, ops]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(vals, f.type) for vals, f in zip(scalars, schema)]
+        + [after.to_arrow(pa, schema.field("after").type),
+           before.to_arrow(pa, schema.field("before").type)],
+        schema=schema,
+    )
+
+
+def _decode_files(capture_dir: str, names: list[str], events: set[str], start_lsn: int):
+    """Yield one ``pyarrow.RecordBatch`` per capture file, built by
+    ``_decode_frames``; a file that admits no event yields nothing.
+
+    pyarrow is imported in the read path, not at module level: the
+    capture daemon imports this module for the frame-file helpers and
+    never reads."""
     state = DecoderState()
     for name in names:
-        frames = read_frame_file(os.path.join(capture_dir, name))
-        rows = [
-            row
-            for row in decode_xlogdata_stream(frames, state)
-            if row["op"] in events and row["lsn"] > start_lsn
-        ]
-        if rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([row[f.name] for row in rows], type=f.type) for f in schema],
-                schema=schema,
-            )
+        batch = _decode_frames(read_frame_file(os.path.join(capture_dir, name)),
+                               state, events, start_lsn)
+        if batch is not None:
+            yield batch
 
 
 class _Options:

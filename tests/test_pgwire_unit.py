@@ -10,6 +10,7 @@ honored. The fix must (a) return within the timeout even mid-message and
 
 from __future__ import annotations
 
+import bisect
 import socket
 import struct
 import time
@@ -20,7 +21,8 @@ from postrack_spark.sources.pgwire import PgWireConnection
 def _bare_connection(sock: socket.socket) -> PgWireConnection:
     conn = object.__new__(PgWireConnection)
     conn.sock = sock
-    conn._buf = b""
+    conn._buf = bytearray()
+    conn._pos = 0
     return conn
 
 
@@ -74,6 +76,64 @@ def test_recv_message_blocking_path_unchanged():
         server.sendall(_msg(b"Z", b"I") + _msg(b"C", b"SELECT 1\x00"))
         assert conn._recv_message() == (b"Z", b"I")
         assert conn._recv_message() == (b"C", b"SELECT 1\x00")
+    finally:
+        client.close()
+        server.close()
+
+
+class _ChunkedSocket:
+    """Hands out a byte stream in fixed recv-sized chunks."""
+
+    def __init__(self, data: bytes, chunk: int):
+        self.chunks = [data[i:i + chunk] for i in range(0, len(data), chunk)]
+
+    def recv(self, n: int) -> bytes:
+        assert self.chunks, "read past the end of the stream"
+        out = self.chunks.pop(0)
+        assert len(out) <= n
+        return out
+
+
+def test_recv_message_across_64k_chunk_boundaries():
+    """Messages of many sizes, one larger than a chunk, read back intact
+    and in order while the stream arrives in 64 KiB recv chunks, with a
+    chunk boundary inside a message header and inside a payload. The
+    consumed prefix is dropped, so the buffer stays near one chunk."""
+    msgs = [(b"d", bytes([i % 251]) * (i * 37 % 300)) for i in range(3000)]
+    msgs.insert(1500, (b"d", b"\x07" * 150_000))
+    stream = b"".join(_msg(t, p) for t, p in msgs)
+    starts = [0]
+    for t, p in msgs:
+        starts.append(starts[-1] + 5 + len(p))
+    chunk = 65536
+    # offset of each chunk boundary inside the message it falls in
+    cuts = {b - starts[bisect.bisect_right(starts, b) - 1] for b in range(chunk, len(stream), chunk)}
+    assert cuts & {1, 2, 3, 4} and max(cuts) > 5  # header and payload splits
+    conn = _bare_connection(_ChunkedSocket(stream, chunk))
+    peak = 0
+    for want in msgs:
+        assert conn._recv_message() == want
+        peak = max(peak, len(conn._buf))
+    assert conn._buf == b"" and conn._pos == 0
+    assert peak <= 2 * chunk + 150_005
+
+
+def test_recv_message_timeout_after_consumed_messages_then_resume():
+    """A timeout mid-message after earlier messages were consumed from
+    the same buffer consumes nothing; the retry returns that message."""
+    client, server = socket.socketpair()
+    try:
+        conn = _bare_connection(client)
+        first, second, third = _msg(b"d", b"a" * 10), _msg(b"d", b"b" * 20), _msg(b"d", b"c" * 30)
+        server.sendall(first + second + third[:12])
+        assert conn._recv_message(timeout=1.0) == (b"d", b"a" * 10)
+        assert conn._recv_message(timeout=1.0) == (b"d", b"b" * 20)
+        pos, buffered = conn._pos, bytes(conn._buf)
+        assert conn._recv_message(timeout=0.25) == (None, None)
+        assert (conn._pos, bytes(conn._buf)) == (pos, buffered)
+        server.sendall(third[12:])
+        assert conn._recv_message(timeout=1.0) == (b"d", b"c" * 30)
+        assert conn._buf == b""
     finally:
         client.close()
         server.close()
