@@ -24,7 +24,7 @@ Go surface -> here:
 
 Postgres I/O goes through an injected `executor` (query/command/
 replication_command) so everything is unit-testable without a server;
-a live psycopg-backed executor can be supplied where available. SQL
+the live executor is sources/pgwire.PgWireExecutor. SQL
 uses identifier quoting rather than the reference's raw interpolation
 (its CREATE PUBLICATION is an injection surface, postrack.go:206).
 """

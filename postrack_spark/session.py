@@ -274,22 +274,13 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     adds a shuffle to an already-parallel plan, so it is safe to leave
     in cluster code paths.
     """
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    key = (id(df), target)
-    hit = _FANOUT_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
-    # Keep a ref to the input so id() stays unique for the cache's life.
-    _FANOUT_CACHE[key] = (df, out)
-    return out
-
-
-# (input id, target) -> (input ref, fanned-out plan). The .rdd partition
-# probe costs a plan conversion; memoize it per DataFrame handle (table
-# handles themselves are memoized in _TABLES_CACHE, so ids are stable).
-_FANOUT_CACHE: dict[tuple[int, int], tuple[DataFrame, DataFrame]] = {}
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    # The .rdd partition probe costs a plan conversion, so the result is
+    # memoized on the input frame itself and dies with it.
+    memo = df.__dict__.setdefault("_fan_out", {})
+    if target not in memo:
+        memo[target] = df.repartition(target) if df.rdd.getNumPartitions() < target else df
+    return memo[target]
 
 
 def _nanos_timestamp_columns(path: str) -> list[str]:

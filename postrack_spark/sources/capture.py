@@ -5,10 +5,10 @@ sources/postgres_cdc.py consumes (contract at postgres_cdc.py:10-27).
 
 The north-star architecture keeps capture OUTSIDE Spark: this module is
 plain Python (no Spark imports) so ``scripts/capture_daemon.py`` can
-run it next to Postgres while the cluster reads the files. Everything
-psycopg-shaped is import-gated and injectable, so the loop, the file
-writer, and the ack policy are fully unit-tested without a server
-(tests/test_capture.py); a live round-trip test runs when
+run it next to Postgres while the cluster reads the files. Its transport
+(pgwire.run_daemon_pgwire) injects the message source and the ack, so
+the loop, the file writer, and the ack policy are fully unit-tested
+without a server (tests/test_capture.py); a remote round-trip runs when
 ``POSTRACK_TEST_DSN`` points at a real Postgres.
 
 Semantics vs the reference:
@@ -374,112 +374,3 @@ def capture_loop(source, writer: FrameFileWriter, ack,
     writer.close()
     if writer.durable_lsn:
         ack(writer.durable_lsn)
-
-
-# ---------------------------------------------------------------- psycopg
-# Everything below needs a live Postgres + psycopg2; import-gated so the
-# rest of the module (and its tests) run without either.
-
-
-def _require_psycopg2():
-    try:
-        import psycopg2
-        import psycopg2.extras
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise RuntimeError(
-            "capture daemon needs psycopg2 (pip install psycopg2-binary) "
-            "next to a live Postgres; the Spark side never does"
-        ) from e
-    return psycopg2
-
-
-class PsycopgExecutor:
-    """api.Executor backed by psycopg2: catalog SQL over a regular
-    connection (postrack.go:93 pool), replication commands over a
-    logical-replication connection (postrack.go:98 second conn with
-    ``?replication=database``)."""
-
-    def __init__(self, dsn: str) -> None:
-        pg = _require_psycopg2()
-        self._conn = pg.connect(dsn)
-        self._conn.autocommit = True
-        self._repl = pg.connect(
-            dsn, connection_factory=pg.extras.LogicalReplicationConnection
-        )
-
-    def query(self, sql: str, params: tuple = ()) -> list[tuple]:
-        with self._conn.cursor() as cur:
-            cur.execute(sql, params or None)
-            return cur.fetchall()
-
-    def command(self, sql: str) -> None:
-        with self._conn.cursor() as cur:
-            cur.execute(sql)
-
-    def replication_command(self, cmd: str) -> None:
-        with self._repl.cursor() as cur:
-            cur.execute(cmd)
-
-
-class _PsycopgMessage:
-    """Adapt psycopg2's ReplicationMessage to the loop's duck type."""
-
-    __slots__ = ("payload", "data_start", "wal_end", "send_time_us")
-
-    def __init__(self, msg) -> None:
-        self.payload = msg.payload
-        self.data_start = msg.data_start
-        self.wal_end = msg.wal_end
-        self.send_time_us = int(msg.send_time.timestamp() * 1_000_000)
-
-
-def run_daemon(dsn: str, slot: str, out_dir: str, publication: str,
-               start_lsn: int = 0, proto_version: int = 1,
-               streaming: bool = False, two_phase: bool = False,
-               ack_interval_s: float = 5.0, max_frames: int = 4096,
-               max_bytes: int = 16 << 20, stop=lambda: False,
-               writer: FrameFileWriter | None = None) -> None:
-    """connect + StartReplication + pump (postrack.go:86-105 + 287-310).
-
-    Starts at ``start_lsn + 1`` like the reference (postrack.go:297's
-    ``pglogrepl.LSN(lsn+1)``); pass the last durable LSN to resume.
-    Pass ``writer`` to re-target the sink (kafka_transport.
-    KafkaFrameWriter); default is the ``.pgout`` file contract.
-    """
-    pg = _require_psycopg2()
-    repl = pg.connect(dsn, connection_factory=pg.extras.LogicalReplicationConnection)
-    cur = repl.cursor()
-    cur.start_replication(
-        slot_name=slot,
-        decode=False,
-        start_lsn=start_lsn + 1,
-        options={
-            "proto_version": str(proto_version),
-            "publication_names": publication,
-            **({"streaming": "on"} if streaming else {}),
-            **({"two_phase": "on"} if two_phase else {}),
-        },
-    )
-    if writer is None:
-        writer = FrameFileWriter(out_dir, max_frames=max_frames,
-                                 max_bytes=max_bytes)
-
-    def source():
-        import select as _select
-
-        while not stop():
-            msg = cur.read_message()  # non-blocking; None when idle
-            if msg is None:
-                # park on the socket (≡ ReceiveMessage's blocking read,
-                # postrack.go:344) but wake ≤1 s for the ack cadence
-                _select.select([repl], [], [], 1.0)
-            yield _PsycopgMessage(msg) if msg is not None else None
-
-    def ack(lsn: int) -> None:
-        cur.send_feedback(flush_lsn=lsn)
-
-    try:
-        capture_loop(source(), writer, ack, ack_interval_s=ack_interval_s,
-                     stop=stop)
-    finally:
-        repl.close()

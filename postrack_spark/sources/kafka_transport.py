@@ -23,8 +23,8 @@ exactly-once rows.
 No Kafka broker (or client package) ships in this container, so the
 producer is a duck type: ``send(topic, key, value)`` + ``flush()`` (+
 optional ``resume_seq(topic)``). ``KafkaProducerAdapter`` binds the
-real kafka-python client when installed — the same import-gated seam
-as psycopg in capture.py — and ``FakeBroker`` (tests) implements the
+real kafka-python client when installed (import-gated), and
+``FakeBroker`` (tests) implements the
 contract in memory with failure injection.
 """
 
@@ -95,9 +95,9 @@ def decode_topic_messages(messages) -> list[dict]:
 
 
 class KafkaProducerAdapter:
-    """Bind the real kafka-python client when installed (import-gated,
-    like capture.py's psycopg seam — no broker or client ships in the
-    test container). acks='all' + synchronous flush implements the
+    """Bind the real kafka-python client when installed (import-gated:
+    no broker or client ships in the test container). acks='all' +
+    synchronous flush implements the
     durable-before-ack contract."""
 
     def __init__(self, bootstrap_servers: str):

@@ -1,13 +1,16 @@
 """Pure-stdlib PostgreSQL frontend: wire protocol v3 + logical
-replication (CopyBoth), no psycopg.
+replication (CopyBoth). It is the capture daemon's one transport.
 
 The protocol is public (PostgreSQL documentation, "Frontend/Backend
 Protocol" + "Streaming Replication Protocol"). This implements exactly
-what the capture daemon needs against a trusted local server:
+what the capture daemon needs, against a local or a remote server:
 
-* startup + trust auth (password/SCRAM auth is out of scope — use the
-  psycopg seam in capture.py for remote servers; this client exists so
-  the in-container live round-trip runs with zero dependencies),
+* settings from one ``postgres[ql]://`` DSN (``parse_dsn``). libpq
+  environment variables, ``.pgpass``, service files, unix sockets and
+  multi-host DSNs are not supported,
+* TLS via SSLRequest for sslmode disable / prefer / require /
+  verify-full, and trust, cleartext, md5 and SCRAM-SHA-256 auth (no
+  ``-PLUS`` channel binding; the password is not SASLprep-normalized),
 * simple Query ('Q') with text-format result sets — enough for catalog
   probes, DDL, DML, and walsender commands (CREATE_REPLICATION_SLOT,
   IDENTIFY_SYSTEM return plain result sets on a replication
@@ -21,20 +24,28 @@ This mirrors the reference's two-connection split (postrack.go:93,98:
 a pooled SQL connection + a ?replication=database connection):
 ``PgWireExecutor`` exposes the api.Executor protocol over two
 PgWireConnections, so the full name-for-name api.py surface
-(publications, slots, catalog probes) runs live without psycopg.
+(publications, slots, catalog probes) runs live.
 """
 
 from __future__ import annotations
 
+import base64
+import hashlib
+import hmac
+import secrets
 import select
 import socket
+import ssl
 import struct
 import time
+from urllib.parse import parse_qsl, unquote, urlsplit
 
 
 _RECV_SIZE = 65536
 _UNPACK_I = struct.Struct(">i").unpack_from
 _MESSAGE_TYPES = [bytes((b,)) for b in range(256)]  # type byte -> bytes, no slice per message
+_SSLMODES = ("disable", "prefer", "require", "verify-full")
+_AUTH_NAMES = {2: "KerberosV5", 6: "SCM", 7: "GSSAPI", 9: "SSPI"}  # unanswered codes
 
 
 class PgError(RuntimeError):
@@ -46,6 +57,64 @@ class PgError(RuntimeError):
             f"{fields.get('S', 'ERROR')} {fields.get('C', '')}: "
             f"{fields.get('M', 'unknown')}"
         )
+
+
+def _fatal(message: str) -> PgError:
+    return PgError({"S": "FATAL", "M": message})
+
+
+def parse_dsn(dsn: str) -> dict:
+    """``postgres[ql]://user:password@host:port/database?sslmode=…&
+    sslrootcert=…`` -> the keyword arguments of PgWireConnection,
+    PgWireExecutor and run_daemon_pgwire, percent-decoded. Defaults:
+    host 127.0.0.1, port 5432, user postgres, database = user (libpq's
+    rule), sslmode prefer (libpq's default)."""
+    u = urlsplit(dsn)
+    if u.scheme not in ("postgres", "postgresql") or "," in u.netloc:
+        raise ValueError(f"not a single-host postgres:// DSN: {u.scheme}://{u.hostname}")
+    params = dict(parse_qsl(u.query, keep_blank_values=True))
+    unknown = set(params) - {"sslmode", "sslrootcert"}
+    if unknown:
+        raise ValueError(f"unsupported DSN parameters: {sorted(unknown)}")
+    user = unquote(u.username) if u.username else "postgres"
+    return {
+        "host": unquote(u.hostname) if u.hostname else "127.0.0.1",
+        "port": u.port or 5432,
+        "user": user,
+        "database": unquote(u.path.lstrip("/")) or user,
+        "password": unquote(u.password) if u.password is not None else None,
+        "sslmode": params.get("sslmode", "prefer"),
+        "sslrootcert": params.get("sslrootcert") or None,
+    }
+
+
+def scram_client_final(password: str, client_first_bare: str,
+                       server_first: bytes) -> tuple[bytes, bytes]:
+    """SCRAM-SHA-256 (RFC 5802 / 7677), gs2 flag ``n``: the client-final
+    message answering ``server_first``, and the server-final message the
+    server must send back (``v=`` + its signature)."""
+    text = server_first.decode()
+    attrs = dict(kv.split("=", 1) for kv in text.split(",") if "=" in kv)
+    client_nonce = client_first_bare.rsplit("r=", 1)[1]
+    nonce = attrs.get("r", "")
+    if not nonce.startswith(client_nonce) or nonce == client_nonce:
+        raise _fatal("SCRAM server nonce does not extend the client nonce")
+    if "s" not in attrs or not attrs.get("i", "").isdigit():
+        raise _fatal(f"malformed SCRAM server-first message {text!r}")
+    salted = hashlib.pbkdf2_hmac("sha256", password.encode(),
+                                 base64.b64decode(attrs["s"]), int(attrs["i"]))
+    client_key = _hmac(salted, b"Client Key")
+    without_proof = f"c=biws,r={nonce}"  # biws = base64("n,,")
+    auth_message = f"{client_first_bare},{text},{without_proof}".encode()
+    signature = _hmac(hashlib.sha256(client_key).digest(), auth_message)
+    proof = base64.b64encode(bytes(a ^ b for a, b in zip(client_key, signature)))
+    server_signature = _hmac(_hmac(salted, b"Server Key"), auth_message)
+    return (f"{without_proof},p={proof.decode()}".encode(),
+            b"v=" + base64.b64encode(server_signature))
+
+
+def _hmac(key: bytes, msg: bytes) -> bytes:
+    return hmac.new(key, msg, hashlib.sha256).digest()
 
 
 class ReplicationMessage:
@@ -66,16 +135,53 @@ def format_lsn(lsn: int) -> str:
 
 
 class PgWireConnection:
-    """One protocol-v3 connection (regular or walsender)."""
+    """One protocol-v3 connection (regular or walsender).
+
+    sslmode ``prefer`` uses TLS when the server offers it, ``require``
+    fails without it, and ``verify-full`` also checks the host name and
+    the chain, against the system CAs when no ``sslrootcert`` is given.
+    As in libpq, any TLS connection checks the chain against a given
+    ``sslrootcert``. ``connect_timeout`` covers connect, TLS and auth."""
 
     def __init__(self, host: str, port: int, user: str, database: str,
-                 replication: bool = False, connect_timeout: float = 10.0):
+                 replication: bool = False, connect_timeout: float = 10.0, *,
+                 password: str | None = None, sslmode: str = "prefer",
+                 sslrootcert: str | None = None):
+        if sslmode not in _SSLMODES:
+            raise ValueError(f"sslmode {sslmode!r} is not one of {_SSLMODES}")
         self.sock = socket.create_connection((host, port), timeout=connect_timeout)
-        self.sock.settimeout(None)
         # received bytes; those before _pos are consumed
         self._buf = bytearray()
         self._pos = 0
         self._copy_both = False
+        try:
+            if sslmode != "disable":
+                self._start_tls(host, sslmode, sslrootcert)
+            self._startup(user, database, replication, password)
+        except BaseException:
+            self.sock.close()
+            raise
+        self.sock.settimeout(None)
+
+    def _start_tls(self, host: str, sslmode: str, sslrootcert: str | None) -> None:
+        self.sock.sendall(struct.pack(">ii", 8, 80877103))  # SSLRequest
+        answer = self.sock.recv(1)  # one byte: nothing may precede the handshake
+        if answer == b"N" and sslmode == "prefer":
+            return
+        if answer != b"S":
+            raise _fatal(f"server answered {answer!r} to SSLRequest; sslmode={sslmode}")
+        ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_CLIENT)
+        ctx.check_hostname = sslmode == "verify-full"
+        if sslrootcert:
+            ctx.load_verify_locations(sslrootcert)
+        elif sslmode == "verify-full":
+            ctx.load_default_certs()
+        else:
+            ctx.verify_mode = ssl.CERT_NONE
+        self.sock = ctx.wrap_socket(self.sock, server_hostname=host)
+
+    def _startup(self, user: str, database: str, replication: bool,
+                 password: str | None) -> None:
         params = {
             "user": user,
             "database": database,
@@ -88,21 +194,44 @@ class PgWireConnection:
         ) + b"\x00"
         pkt = struct.pack(">iI", len(body) + 8, 196608) + body  # protocol 3.0
         self.sock.sendall(pkt)
+        scram_first = scram_final = None  # set while a SCRAM exchange runs
         # consume until ReadyForQuery
         while True:
             mtype, payload = self._recv_message()
             if mtype == b"R":
                 (code,) = struct.unpack_from(">i", payload)
-                if code != 0:
-                    raise PgError(
-                        {"S": "FATAL", "M": f"auth method {code} unsupported "
-                         "(pgwire client handles trust only; use the psycopg "
-                         "seam for password/SCRAM servers)"}
-                    )
+                if code in (3, 5, 10) and password is None:
+                    raise _fatal("server asked for a password; the DSN has none")
+                if code == 0 and scram_first is not None:
+                    raise _fatal("AuthenticationOk before the SCRAM server signature")
+                if code == 3:  # cleartext
+                    self._send_message(b"p", password.encode() + b"\x00")
+                elif code == 5:  # md5 with a 4-byte salt
+                    inner = hashlib.md5((password + user).encode()).hexdigest().encode()
+                    digest = hashlib.md5(inner + payload[4:8]).hexdigest()
+                    self._send_message(b"p", f"md5{digest}".encode() + b"\x00")
+                elif code == 10:  # SASL, with a NUL-terminated mechanism list
+                    if b"SCRAM-SHA-256" not in payload[4:].split(b"\x00"):
+                        raise _fatal(f"SASL mechanisms {payload[4:]!r} unsupported")
+                    # Postgres ignores the SCRAM user name: it checks the startup user
+                    scram_first = f"n=,r={secrets.token_urlsafe(18)}"
+                    first = b"n,," + scram_first.encode()
+                    self._send_message(b"p", b"SCRAM-SHA-256\x00"
+                                       + struct.pack(">i", len(first)) + first)
+                elif code == 11 and scram_first is not None:  # SASLContinue
+                    final, scram_final = scram_client_final(password, scram_first, payload[4:])
+                    self._send_message(b"p", final)
+                elif code == 12 and scram_final is not None:  # SASLFinal
+                    if not hmac.compare_digest(payload[4:], scram_final):
+                        raise _fatal("SCRAM server signature does not verify")
+                    scram_first = None
+                elif code != 0:
+                    raise _fatal(f"auth method {_AUTH_NAMES.get(code, code)} unsupported "
+                                 "(pgwire answers trust, password, md5 and SCRAM-SHA-256)")
             elif mtype == b"E":
                 raise PgError(self._error_fields(payload))
             elif mtype == b"Z":
-                break
+                return
             # 'S' ParameterStatus / 'K' BackendKeyData / 'N' Notice: ignore
 
     # -- low-level framing -------------------------------------------
@@ -116,7 +245,9 @@ class PgWireConnection:
         sock.recv blocked indefinitely on a stalled server and the
         daemon's stop() flag (SIGTERM) was never rechecked."""
         while len(self._buf) - self._pos < n:
-            if deadline is not None:
+            # a TLS socket may hold decrypted bytes that select() cannot see
+            if deadline is not None and not (
+                    isinstance(self.sock, ssl.SSLSocket) and self.sock.pending()):
                 remaining = deadline - time.monotonic()
                 if remaining <= 0:
                     return False
@@ -204,9 +335,10 @@ class PgWireConnection:
 
     def start_replication(self, slot: str, start_lsn: int,
                           options: dict[str, str]) -> None:
-        opts = ", ".join(f"{k} '{v}'" for k, v in options.items())
+        opts = ", ".join(f"{_quote_ident(k)} {_quote_literal(v)}"
+                         for k, v in options.items())
         self.query(
-            f'START_REPLICATION SLOT "{slot}" LOGICAL '
+            f"START_REPLICATION SLOT {_quote_ident(slot)} LOGICAL "
             f"{format_lsn(start_lsn)} ({opts})"
         )
         if not self._copy_both:
@@ -258,20 +390,32 @@ def _quote_literal(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
+def _quote_ident(name: str) -> str:
+    return '"' + name.replace('"', '""') + '"'
+
+
+def _bind_params(sql: str, params: tuple) -> str:
+    # split once, so a parameter that contains %s is never scanned again
+    parts = sql.split("%s")
+    if len(parts) != len(params) + 1:
+        raise ValueError(f"{len(parts) - 1} placeholders for {len(params)} parameters")
+    return parts[0] + "".join(_quote_literal(p) + part for p, part in zip(params, parts[1:]))
+
+
 class PgWireExecutor:
     """api.Executor over two PgWireConnections (the reference's pooled
     SQL conn + replication conn split, postrack.go:93,98). ``%s``
     placeholders are substituted client-side with quoted literals —
-    the api.py catalog probes only ever pass names."""
+    the api.py catalog probes only ever pass names. ``conn_options`` are
+    PgWireConnection's keywords: ``PgWireExecutor(**parse_dsn(dsn))``."""
 
-    def __init__(self, host: str, port: int, user: str, database: str):
-        self._conn = PgWireConnection(host, port, user, database)
-        self._repl = PgWireConnection(host, port, user, database, replication=True)
+    def __init__(self, host: str, port: int, user: str, database: str, **conn_options):
+        self._conn = PgWireConnection(host, port, user, database, **conn_options)
+        self._repl = PgWireConnection(host, port, user, database, replication=True,
+                                      **conn_options)
 
     def query(self, sql: str, params: tuple = ()) -> list[tuple]:
-        for p in params or ():
-            sql = sql.replace("%s", _quote_literal(p), 1)
-        return self._conn.query(sql)
+        return self._conn.query(_bind_params(sql, params) if params else sql)
 
     def command(self, sql: str) -> None:
         self._conn.query(sql)
@@ -291,15 +435,16 @@ def run_daemon_pgwire(host: str, port: int, user: str, database: str,
                       messages: bool = False, binary: bool = False,
                       ack_interval_s: float = 5.0, max_frames: int = 4096,
                       max_bytes: int = 16 << 20, stop=lambda: False,
-                      writer=None) -> None:
-    """capture.run_daemon with the pure-stdlib transport: connect +
-    StartReplication + pump (postrack.go:86-105, 287-310), resuming at
+                      writer=None, **conn_options) -> None:
+    """The capture daemon: connect + StartReplication + pump
+    (postrack.go:86-105, 287-310) into capture.capture_loop, resuming at
     ``start_lsn + 1`` like the reference (postrack.go:297). Pass
     ``writer`` to re-target the sink (e.g. kafka_transport.
-    KafkaFrameWriter); default is the ``.pgout`` file contract."""
+    KafkaFrameWriter); default is the ``.pgout`` file contract.
+    ``conn_options`` are PgWireConnection's keywords (see parse_dsn)."""
     from postrack_spark.sources.capture import FrameFileWriter, capture_loop
 
-    repl = PgWireConnection(host, port, user, database, replication=True)
+    repl = PgWireConnection(host, port, user, database, replication=True, **conn_options)
     options = {
         "proto_version": str(proto_version),
         "publication_names": publication,

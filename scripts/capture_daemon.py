@@ -24,31 +24,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from postrack_spark.api import Conn, Table, create_publication_id
-from postrack_spark.sources.capture import PsycopgExecutor, run_daemon
-
-
-def _dsn_parts(dsn: str) -> dict:
-    """host/port/user/database from a postgres:// DSN (pgwire transport)."""
-    from urllib.parse import urlparse
-
-    u = urlparse(dsn)
-    return {
-        "host": u.hostname or "127.0.0.1",
-        "port": u.port or 5432,
-        "user": u.username or "postgres",
-        "database": (u.path or "/postgres").lstrip("/") or "postgres",
-    }
-
-
-def _pick_transport(requested: str) -> str:
-    if requested != "auto":
-        return requested
-    try:
-        import psycopg2  # noqa: F401
-
-        return "psycopg"
-    except ImportError:
-        return "pgwire"
+from postrack_spark.sources.pgwire import PgWireExecutor, parse_dsn, run_daemon_pgwire
 
 
 def main() -> int:
@@ -66,10 +42,6 @@ def main() -> int:
                     help="proto v2 in-progress transaction streaming")
     ap.add_argument("--two-phase", action="store_true",
                     help="proto v3 two-phase decoding (TWO_PHASE slot)")
-    ap.add_argument("--transport", default="auto",
-                    choices=("auto", "psycopg", "pgwire"),
-                    help="psycopg2 when installed, else the pure-stdlib "
-                         "wire client (trust-auth servers)")
     ap.add_argument("--sink", default="file", choices=("file", "kafka"),
                     help="where rolls go: .pgout files in --out (default) "
                          "or one message per roll on a Kafka topic "
@@ -84,20 +56,21 @@ def main() -> int:
     ap.add_argument("--max-bytes", type=int, default=16 << 20)
     args = ap.parse_args()
 
-    transport = _pick_transport(args.transport)
+    try:
+        dsn = parse_dsn(args.dsn)
+    except ValueError as e:
+        ap.error(f"--dsn: {e}")
 
     if args.create:
-        if transport == "psycopg":
-            executor = PsycopgExecutor(args.dsn)
-        else:
-            from postrack_spark.sources.pgwire import PgWireExecutor
-
-            executor = PgWireExecutor(**_dsn_parts(args.dsn))
-        conn = Conn(args.dsn, executor=executor)
-        conn.set_slot(args.slot)
-        for spec in args.table:
-            schema, _, name = spec.partition(".")
-            conn.set_publication(Table(schema, name))
+        executor = PgWireExecutor(**dsn)
+        try:
+            conn = Conn(args.dsn, executor=executor)
+            conn.set_slot(args.slot)
+            for spec in args.table:
+                schema, _, name = spec.partition(".")
+                conn.set_publication(Table(schema, name))
+        finally:
+            executor.close()  # its walsender would hold a max_wal_senders seat
 
     stopping = {"flag": False}
 
@@ -128,12 +101,7 @@ def main() -> int:
             max_frames=args.max_frames, max_bytes=args.max_bytes,
             resume_seq=0,
         )
-    if transport == "psycopg":
-        run_daemon(args.dsn, out_dir=args.out, **common)
-    else:
-        from postrack_spark.sources.pgwire import run_daemon_pgwire
-
-        run_daemon_pgwire(out_dir=args.out, **_dsn_parts(args.dsn), **common)
+    run_daemon_pgwire(out_dir=args.out, **dsn, **common)
     return 0
 
 

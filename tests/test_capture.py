@@ -282,16 +282,17 @@ def test_daemon_output_via_datasource(spark):
 )
 def test_live_postgres_roundtrip(spark):  # pragma: no cover - env-gated
     """Full loop against a real server: provision slot+publication via
-    PsycopgExecutor, write a row, run the daemon one ack cycle, read
-    the frames back through the DataSource."""
+    PgWireExecutor, write a row, run the daemon one ack cycle, read
+    the frames back through the DataSource. Both are built from the DSN
+    through pgwire.parse_dsn (password, sslmode, sslrootcert)."""
     import threading
 
     from postrack_spark.api import Conn, Table, create_publication_id
-    from postrack_spark.sources.capture import PsycopgExecutor, run_daemon
+    from postrack_spark.sources.pgwire import PgWireExecutor, parse_dsn, run_daemon_pgwire
     from postrack_spark.sources.postgres_cdc import register
 
     dsn = os.environ["POSTRACK_TEST_DSN"]
-    ex = PsycopgExecutor(dsn)
+    ex = PgWireExecutor(**parse_dsn(dsn))
     ex.command("DROP TABLE IF EXISTS public.postrack_it")
     ex.command("CREATE TABLE public.postrack_it (id int primary key, v text)")
     conn = Conn(dsn, executor=ex)
@@ -302,9 +303,10 @@ def test_live_postgres_roundtrip(spark):  # pragma: no cover - env-gated
     d = tempfile.mkdtemp(prefix="daemon_live_")
     stop = {"flag": False}
     t = threading.Thread(
-        target=run_daemon,
-        args=(dsn, "postrack_it_slot", d, create_publication_id("postrack_it_slot")),
-        kwargs={"ack_interval_s": 1.0, "stop": lambda: stop["flag"]},
+        target=run_daemon_pgwire,
+        kwargs={**parse_dsn(dsn), "slot": "postrack_it_slot", "out_dir": d,
+                "publication": create_publication_id("postrack_it_slot"),
+                "ack_interval_s": 1.0, "stop": lambda: stop["flag"]},
         daemon=True,
     )
     t.start()

@@ -1,10 +1,9 @@
 """LIVE Postgres end-to-end: the one reference behavior that had never
 run against a real server in this environment (VERDICT r3, missing #1).
 
-This module provisions a REAL PostgreSQL server (the container ships
-the server binaries; it has no psycopg, so the wire transport is the
-pure-stdlib protocol-v3 client in sources/pgwire.py), then exercises
-the reference's full flow name-for-name:
+This module provisions a REAL PostgreSQL server (the wire transport is
+the pure-stdlib protocol-v3 client in sources/pgwire.py), then
+exercises the reference's full flow name-for-name:
 
   connect (two-connection split) -> catalog probes -> set_slot
   (CREATE_REPLICATION_SLOT over the walsender protocol) ->
@@ -15,7 +14,9 @@ the reference's full flow name-for-name:
 plus the restart/resume path (new daemon from the slot's
 confirmed_flush_lsn, the production resume signal) and a protocol-v2
 STREAMED in-progress transaction forced by a tiny
-logical_decoding_work_mem.
+logical_decoding_work_mem. A second server with ssl=on and password
+roles proves TLS (sslmode require / verify-full) and SCRAM-SHA-256, md5
+and cleartext auth, down to a daemon run from a password DSN.
 
 Skips (not fails) when the server binaries are missing or the server
 cannot start (e.g. no non-root user to run it as).
@@ -296,7 +297,7 @@ def test_live_capture_roundtrip_and_resume(live_pg, spark):
 
 def test_live_capture_daemon_cli(live_pg, spark):
     """The production entrypoint itself: scripts/capture_daemon.py run
-    as a subprocess with --transport pgwire --create (slot +
+    as a subprocess with --create (slot +
     publication provisioning included), SIGTERMed after the ack covers
     the workload — decoded envelopes must match the committed rows."""
     import signal as _signal
@@ -323,7 +324,7 @@ def test_live_capture_daemon_cli(live_pg, spark):
             [
                 "python", script, "--dsn", dsn, "--slot", slot,
                 "--out", out_dir, "--table", "public.live_cli",
-                "--create", "--transport", "pgwire",
+                "--create",
                 "--ack-interval", "0.3", "--max-frames", "8",
             ],
             stdout=subprocess.PIPE, stderr=subprocess.PIPE,
@@ -1155,3 +1156,218 @@ def test_live_binary_mode_tuples(live_pg, spark):
         conn.drop_slot(slot)
     finally:
         ex.close()
+
+
+# ------------------------------------------------ TLS + password auth
+# A second throwaway server: ssl=on with a CA made here, and one role
+# per password method. scram_user may connect only over TLS.
+_SCRAM_PW = "s3cr@t:/%pw"  # needs percent-encoding inside a DSN
+_HBA = """\
+hostssl all scram_user 127.0.0.1/32 scram-sha-256
+host all md5_user 127.0.0.1/32 md5
+host all pw_user 127.0.0.1/32 password
+host all postgres 127.0.0.1/32 trust
+"""
+
+
+def _write_tls_files(data: str, ca_path: str) -> None:
+    """A CA, and a server certificate it signs for 127.0.0.1 and
+    localhost, written where the server reads them."""
+    import datetime
+    import ipaddress
+
+    from cryptography import x509
+    from cryptography.hazmat.primitives import hashes, serialization
+    from cryptography.hazmat.primitives.asymmetric import ec
+    from cryptography.x509.oid import NameOID
+
+    now = datetime.datetime.now(datetime.timezone.utc)
+
+    def cert(cn, key, issuer, signer, ca, san=()):
+        b = (
+            x509.CertificateBuilder()
+            .subject_name(x509.Name([x509.NameAttribute(NameOID.COMMON_NAME, cn)]))
+            .issuer_name(issuer)
+            .public_key(key.public_key())
+            .serial_number(x509.random_serial_number())
+            .not_valid_before(now - datetime.timedelta(minutes=5))
+            .not_valid_after(now + datetime.timedelta(days=1))
+            .add_extension(x509.BasicConstraints(ca=ca, path_length=None), critical=True)
+        )
+        if san:
+            b = b.add_extension(x509.SubjectAlternativeName(list(san)), critical=False)
+        return b.sign(signer, hashes.SHA256())
+
+    ca_key = ec.generate_private_key(ec.SECP256R1())
+    ca_name = x509.Name([x509.NameAttribute(NameOID.COMMON_NAME, "postrack test CA")])
+    ca = cert("postrack test CA", ca_key, ca_name, ca_key, True)
+    key = ec.generate_private_key(ec.SECP256R1())
+    server = cert("127.0.0.1", key, ca_name, ca_key, False,
+                  san=(x509.IPAddress(ipaddress.ip_address("127.0.0.1")),
+                       x509.DNSName("localhost")))
+    pem = serialization.Encoding.PEM
+    with open(ca_path, "wb") as f:
+        f.write(ca.public_bytes(pem))
+    owner = os.stat(data)
+    for name, blob in (
+        ("server.crt", server.public_bytes(pem)),
+        ("server.key", key.private_bytes(pem, serialization.PrivateFormat.PKCS8,
+                                         serialization.NoEncryption())),
+        ("pg_hba.conf", _HBA.encode()),
+    ):
+        path = os.path.join(data, name)
+        with open(path, "wb") as f:
+            f.write(blob)
+        # postgres refuses a key that others can read, or that another
+        # user owns
+        os.chmod(path, 0o600)
+        os.chown(path, owner.st_uid, owner.st_gid)
+
+
+@pytest.fixture(scope="module")
+def live_pg_tls():
+    pytest.importorskip("cryptography")
+    from postrack_spark.sources.pgwire import PgWireExecutor
+
+    base = tempfile.mkdtemp(prefix="pglive_tls_")
+    os.chmod(base, 0o777)
+    data = os.path.join(base, "data")
+    port = _free_port()
+    r = _sh_as_pg(f"{shutil.which('initdb')} -D {data} -A trust -U postgres")
+    if r.returncode != 0:
+        pytest.skip(f"initdb failed: {r.stderr[-300:]}")
+    ca = os.path.join(base, "ca.crt")
+    _write_tls_files(data, ca)
+    opts = (
+        f"-c port={port} -c listen_addresses=127.0.0.1 -c wal_level=logical "
+        f"-c max_replication_slots=4 -c max_wal_senders=4 -c fsync=off "
+        f"-c ssl=on -c ssl_cert_file=server.crt -c ssl_key_file=server.key "
+        f"-c unix_socket_directories={base}"
+    )
+    r = _sh_as_pg(
+        f"{shutil.which('pg_ctl')} -D {data} -o '{opts}' -w "
+        f"-l {base}/pg.log start"
+    )
+    if r.returncode != 0:
+        pytest.skip(f"postgres failed to start: {r.stdout[-300:]} {r.stderr[-300:]}")
+    try:
+        ex = PgWireExecutor("127.0.0.1", port, "postgres", "postgres")
+        try:
+            ex.command(f"CREATE ROLE scram_user LOGIN SUPERUSER PASSWORD '{_SCRAM_PW}'")
+            ex.command("SET password_encryption = 'md5'")
+            ex.command("CREATE ROLE md5_user LOGIN PASSWORD 'md5-pw'")
+            ex.command("RESET password_encryption")
+            ex.command("CREATE ROLE pw_user LOGIN PASSWORD 'clear-pw'")
+            stored = dict(ex.query(
+                "SELECT rolname, left(rolpassword, 5) FROM pg_authid "
+                "WHERE rolname IN ('scram_user', 'md5_user')"))
+            assert stored["scram_user"] == "SCRAM" and stored["md5_user"].startswith("md5")
+        finally:
+            ex.close()
+        yield {"host": "127.0.0.1", "port": port, "ca": ca}
+    finally:
+        _sh_as_pg(f"{shutil.which('pg_ctl')} -D {data} -m immediate stop")
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _ssl_in_use(conn) -> str:
+    return conn.query("SELECT ssl FROM pg_stat_ssl WHERE pid = pg_backend_pid()")[0][0]
+
+
+def test_live_tls_scram_require_and_verify_full(live_pg_tls):
+    """SCRAM-SHA-256 over TLS, with the chain unchecked (require) and
+    checked against the generated CA plus the host name (verify-full).
+    verify-full against the system CAs must refuse the test CA."""
+    import ssl
+
+    from postrack_spark.sources.pgwire import PgWireConnection
+
+    host, port, ca = live_pg_tls["host"], live_pg_tls["port"], live_pg_tls["ca"]
+    for mode, root in (("require", None), ("verify-full", ca)):
+        conn = PgWireConnection(host, port, "scram_user", "postgres",
+                                password=_SCRAM_PW, sslmode=mode, sslrootcert=root)
+        try:
+            assert isinstance(conn.sock, ssl.SSLSocket)
+            assert _ssl_in_use(conn) == "t"
+            assert conn.query("SELECT current_user") == [("scram_user",)]
+        finally:
+            conn.close()
+    with pytest.raises(ssl.SSLCertVerificationError):
+        PgWireConnection(host, port, "scram_user", "postgres",
+                         password=_SCRAM_PW, sslmode="verify-full")
+
+
+def test_live_md5_and_cleartext_password_auth(live_pg_tls):
+    """md5 over a plain connection (sslmode=disable) and cleartext
+    `password` auth over TLS (the default sslmode, prefer)."""
+    from postrack_spark.sources.pgwire import PgWireConnection
+
+    host, port = live_pg_tls["host"], live_pg_tls["port"]
+    for user, password, sslmode, ssl_used in (
+        ("md5_user", "md5-pw", "disable", "f"),
+        ("pw_user", "clear-pw", "prefer", "t"),
+    ):
+        conn = PgWireConnection(host, port, user, "postgres",
+                                password=password, sslmode=sslmode)
+        try:
+            assert conn.query("SELECT current_user") == [(user,)]
+            assert _ssl_in_use(conn) == ssl_used
+        finally:
+            conn.close()
+
+
+def test_live_auth_and_tls_refusals(live_pg_tls, live_pg):
+    """A wrong password is the server's 28P01; sslmode=require against a
+    server without TLS fails instead of falling back to plain text."""
+    from postrack_spark.sources.pgwire import PgError, PgWireConnection
+
+    for user in ("scram_user", "md5_user", "pw_user"):
+        with pytest.raises(PgError) as err:
+            PgWireConnection(live_pg_tls["host"], live_pg_tls["port"], user,
+                             "postgres", password="wrong", sslmode="require")
+        assert err.value.fields["C"] == "28P01"
+    with pytest.raises(PgError, match="sslmode=require"):
+        PgWireConnection(live_pg["host"], live_pg["port"], live_pg["user"],
+                         live_pg["database"], sslmode="require")
+
+
+def test_live_daemon_from_password_dsn(live_pg_tls):
+    """run_daemon_pgwire built from a password DSN (SCRAM, verify-full
+    against the generated CA, percent-encoded password) captures a
+    committed row into frame files."""
+    from urllib.parse import quote
+
+    from postrack_spark.api import Conn, Table, create_publication_id
+    from postrack_spark.sources.pgoutput import DecoderState, decode_xlogdata_stream
+    from postrack_spark.sources.pgwire import PgWireExecutor, parse_dsn
+    from postrack_spark.sources.postgres_cdc import read_frame_file
+
+    dsn = (
+        f"postgres://scram_user:{quote(_SCRAM_PW, safe='')}@{live_pg_tls['host']}:"
+        f"{live_pg_tls['port']}/postgres?sslmode=verify-full&sslrootcert={live_pg_tls['ca']}"
+    )
+    opts = parse_dsn(dsn)
+    assert opts["password"] == _SCRAM_PW
+    slot, out_dir = "live_tls_slot", tempfile.mkdtemp(prefix="pglive_tls_frames_")
+    ex = PgWireExecutor(**opts)
+    try:
+        ex.command("CREATE TABLE public.live_tls (id int primary key, v text)")
+        conn = Conn(dsn, executor=ex)
+        conn.set_slot(slot)
+        conn.set_publication(Table("public", "live_tls"))
+        ex.command("INSERT INTO public.live_tls VALUES (1, 'over tls')")
+        target = _parse_lsn(ex.query("SELECT pg_current_wal_lsn()")[0][0])
+        _run_capture(opts, slot, create_publication_id(slot), out_dir,
+                     start_lsn=0, until_lsn=target)
+        state, rows = DecoderState(), []
+        for name in sorted(os.listdir(out_dir)):
+            if name.endswith(".pgout"):
+                rows += decode_xlogdata_stream(
+                    read_frame_file(os.path.join(out_dir, name)), state)
+        assert [(r["table"], r["op"], r["after"]) for r in rows] == [
+            ("live_tls", "INSERT", {"id": "1", "v": "over tls"})]
+        conn.drop_publication()
+        conn.drop_slot(slot)
+    finally:
+        ex.close()
+        shutil.rmtree(out_dir, ignore_errors=True)

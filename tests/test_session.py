@@ -1,6 +1,10 @@
-"""Settings ``session.get_spark`` pins on the sessions it builds."""
+"""Settings ``session.get_spark`` pins on the sessions it builds, and
+the lifetime of ``session.fan_out``'s memo."""
 
 from __future__ import annotations
+
+import gc
+import weakref
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -17,3 +21,20 @@ def test_dataframe_call_site_capture_is_off(spark, monkeypatch):
     with pytest.raises(AnalysisException) as err:
         spark.range(1).select(F.col("no_such_column")).collect()
     assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+
+
+def test_fan_out_memo_dies_with_its_frame(spark):
+    """fan_out memoizes per input frame without a module-level cache:
+    once the caller drops the input and the result, nothing keeps them
+    alive, on the repartition path and on the no-op path."""
+    from postrack_spark.session import fan_out
+
+    for partitions in (1, 4):
+        df = spark.range(0, 8, 1, partitions)
+        out = fan_out(df, 2)
+        assert fan_out(df, 2) is out
+        assert (out is df) == (partitions >= 2)
+        refs = [weakref.ref(df), weakref.ref(out)]
+        del df, out
+        gc.collect()
+        assert [r() for r in refs] == [None, None]
