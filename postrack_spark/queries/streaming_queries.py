@@ -4695,14 +4695,15 @@ _DS_MONTHS = [f"1995-{m:02d}" for m in range(1, 13)]
 
 
 def _ds_prune_certified(spark: SparkSession, fmt: str, table: str,
-                        lib_stats: dict) -> DataFrame:
-    """Shared SQL-lane half of the two DataSource pruning queries:
-    register a TEMPORARY VIEW over the table USING the named Python
-    source, aggregate through plain spark.sql with a pushed IN filter
-    on the month partition column, and certify (a) the planner pruned
-    (0 < scanned < total, from the scan_report side file the planner
-    writes) and (b) PARITY — the DataSource pruned exactly the file
-    set the library path pruned (lib_stats from
+                        lib_stats: dict, **prune) -> DataFrame:
+    """Shared SQL-lane half of the DataSource pruning queries: register
+    a TEMPORARY VIEW over the table USING the named Python source, with
+    the library read's own pruning argument (``prune``: partition_filter
+    or stats_filter) passed as a JSON view OPTION, aggregate through
+    plain spark.sql with the month WHERE, and certify (a) the planner
+    pruned (0 < scanned < total, from the scan_report side file the
+    planner writes) and (b) PARITY — the DataSource pruned exactly the
+    file set the library path pruned (lib_stats from
     read_delta/read_iceberg scan_stats). The count() materializes the
     plan so the report exists before the certificate reads it."""
     import json as _json
@@ -4715,9 +4716,10 @@ def _ds_prune_certified(spark: SparkSession, fmt: str, table: str,
     register_lakehouse_sources(spark)
     rep = _os.path.join(table, f"_scan_report_{uuid.uuid4().hex}.json")
     view = f"lhds_{uuid.uuid4().hex}"
+    opts = "".join(f", {k} '{_json.dumps(v)}'" for k, v in prune.items())
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY VIEW {view} USING {fmt} "
-        f"OPTIONS (path '{table}', scan_report '{rep}')")
+        f"OPTIONS (path '{table}', scan_report '{rep}'{opts})")
     months = ", ".join(f"'{m}'" for m in _DS_MONTHS)
     sql_df = spark.sql(f"""
         SELECT month,
@@ -4744,10 +4746,13 @@ def sql_datasource_delta_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/lakehouse_ds.py pydelta; VERDICT r7 next-round item 1):
     the table is written through the library (write_delta
     partition_by=month), then read ENTIRELY through SQL —
-    CREATE TEMPORARY VIEW … USING pydelta + a plain GROUP BY with a
-    WHERE month IN (…) the Spark 4.1 pushFilters machinery hands to
-    the planner, which prunes files from the log's partitionValues
-    BEFORE any footer opens. Certificates: ``pruned`` gates
+    CREATE TEMPORARY VIEW … USING pydelta OPTIONS (partition_filter
+    '{"month": [...]}') + a plain GROUP BY with a WHERE month IN (…).
+    The option goes to delta_log.plan_scan_delta — read_delta's own
+    planner — which prunes files from the log's partitionValues BEFORE
+    any footer opens; the WHERE filters rows (pruning from Spark's
+    pushed filters is unsound here, sources/lakehouse_ds.py explains
+    why). Certificates: ``pruned`` gates
     0 < files_scanned < files_total from the planner's scan report;
     ``parity`` gates that the pruned file set EQUALS what the library
     path (read_delta partition_filter= + scan_stats=) plans — the SQL
@@ -4763,23 +4768,23 @@ def sql_datasource_delta_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = _tf.mkdtemp(prefix="lhds_delta_q_")
     write_delta(base, table, partition_by=["month"])
     lib_stats: dict = {}
-    read_delta(spark, table, partition_filter={"month": _DS_MONTHS},
-               scan_stats=lib_stats)
-    return _ds_prune_certified(spark, "pydelta", table, lib_stats)
+    prune = {"month": _DS_MONTHS}
+    read_delta(spark, table, partition_filter=prune, scan_stats=lib_stats)
+    return _ds_prune_certified(spark, "pydelta", table, lib_stats,
+                               partition_filter=prune)
 
 
 @query("sql_datasource_iceberg_pruning", oracle=_DS_PRUNE_ORACLE)
 def sql_datasource_iceberg_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Iceberg half of the DataSource + SQL lane (pyiceberg):
     identity-partitioned append through the library, read through
-    CREATE TEMPORARY VIEW … USING pyiceberg + plain SQL. The pushed
-    month IN (…) maps onto the DEFAULT spec's identity partition
-    field and prunes during plan_scan_iceberg's manifest walk — the
-    EXACT planner read_iceberg uses (shared by construction), which
-    the ``parity`` certificate gates against the library path's
-    scan_stats. Hidden-transform specs (bucket/year) keep pruning
-    through the library's partition_filter option; the SQL lane's
-    pushdown covers the identity case a SQL user actually writes."""
+    CREATE TEMPORARY VIEW … USING pyiceberg OPTIONS (partition_filter
+    '{"month": [...]}') + plain SQL with the month WHERE. The option
+    prunes during plan_scan_iceberg's manifest walk — the EXACT
+    planner read_iceberg uses (shared by construction), which the
+    ``parity`` certificate gates against the library path's
+    scan_stats. The option names a partition FIELD, so hidden
+    transforms (bucket/year) prune through it the same way."""
     import tempfile as _tf
 
     from postrack_spark.streaming.iceberg import append_iceberg, read_iceberg
@@ -4788,9 +4793,10 @@ def sql_datasource_iceberg_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     table = _tf.mkdtemp(prefix="lhds_ice_q_")
     append_iceberg(base, table, partition_by=[("month", "identity")])
     lib_stats: dict = {}
-    read_iceberg(spark, table, partition_filter={"month": _DS_MONTHS},
-                 scan_stats=lib_stats)
-    return _ds_prune_certified(spark, "pyiceberg", table, lib_stats)
+    prune = {"month": _DS_MONTHS}
+    read_iceberg(spark, table, partition_filter=prune, scan_stats=lib_stats)
+    return _ds_prune_certified(spark, "pyiceberg", table, lib_stats,
+                               partition_filter=prune)
 
 
 @query(
@@ -5071,7 +5077,7 @@ def sql_datasource_delta_write_roundtrip(spark: SparkSession, sf_dir: str) -> Da
     parquet (stats harvested in the same pass, partitionValues
     recorded per file), the driver's commit() runs the library's OCC
     commit — and the result reads back through the SQL view with the
-    same month-IN pushdown pruning as the library-written twin
+    same partition_filter option pruning as the library-written twin
     (sql_datasource_delta_pruning shares the oracle: byte-identical
     answers prove the two write lanes produce one table semantics).
     The creating seed uses write_delta(partition_by=) because
@@ -5095,9 +5101,10 @@ def sql_datasource_delta_write_roundtrip(spark: SparkSession, sf_dir: str) -> Da
     (base.filter(F.col("o_orderkey") % 7 != 0)
      .write.format("pydelta").mode("append").save(table))
     lib_stats: dict = {}
-    read_delta(spark, table, partition_filter={"month": _DS_MONTHS},
-               scan_stats=lib_stats)
-    return _ds_prune_certified(spark, "pydelta", table, lib_stats)
+    prune = {"month": _DS_MONTHS}
+    read_delta(spark, table, partition_filter=prune, scan_stats=lib_stats)
+    return _ds_prune_certified(spark, "pydelta", table, lib_stats,
+                               partition_filter=prune)
 
 
 @query(
@@ -5252,13 +5259,13 @@ def sql_datasource_iceberg_write_roundtrip(spark: SparkSession, sf_dir: str) -> 
     """The Iceberg WRITE half of the DataSource lane:
     ``df.write.format("pyiceberg")`` appends through append_iceberg's
     staged-entries path (workers write parquet + harvest footer
-    bounds; the commit binds them to field-ids), and the month-IN SQL
-    read prunes from those harvested STATS BOUNDS — no partitioning
+    bounds; the commit binds them to field-ids), and the SQL read
+    prunes from those harvested STATS BOUNDS through the view's
+    stats_filter option ('{"month": [min, max]}') — no partitioning
     at all: the write was range-clustered on month, so the manifest
-    min/max alone prove most files empty (the pushed IN-set also
-    bounds a closed range for the stats pruner). parity gates the
-    pruned file set against read_iceberg(stats_filter=(min, max)) —
-    the library twin of the same closed-range proof."""
+    min/max alone prove most files empty. parity gates the pruned
+    file set against read_iceberg(stats_filter=(min, max)) — the
+    library twin of the same closed-range proof."""
     import tempfile as _tf
 
     from postrack_spark.sources.lakehouse_ds import (
@@ -5272,10 +5279,10 @@ def sql_datasource_iceberg_write_roundtrip(spark: SparkSession, sf_dir: str) -> 
     (base.repartitionByRange(8, "month")
      .write.format("pyiceberg").mode("append").save(table))
     lib_stats: dict = {}
-    read_iceberg(spark, table,
-                 stats_filter={"month": (_DS_MONTHS[0], _DS_MONTHS[-1])},
-                 scan_stats=lib_stats)
-    return _ds_prune_certified(spark, "pyiceberg", table, lib_stats)
+    prune = {"month": (_DS_MONTHS[0], _DS_MONTHS[-1])}
+    read_iceberg(spark, table, stats_filter=prune, scan_stats=lib_stats)
+    return _ds_prune_certified(spark, "pyiceberg", table, lib_stats,
+                               stats_filter=prune)
 
 
 @query(

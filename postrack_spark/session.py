@@ -87,11 +87,6 @@ def configure_session(spark: SparkSession) -> None:
     # only act on schemas that actually carry the metadata.
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    # Python DataSource filter pushdown (Spark 4.1): required for the
-    # lakehouse batch DataSources (sources/lakehouse_ds.py) to receive
-    # pushFilters and file-prune from pushed predicates. Off by default
-    # upstream only because pre-4.1 readers never saw filters.
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
 
 
 # DataFrame handles per (session, sf_dir): building a scan DataFrame
@@ -243,6 +238,11 @@ def pin_small(name: str, df: DataFrame) -> DataFrame:
         _PINNED_ORDER.append(name)
     for released in to_release:
         _unpersist_quietly(released)
+    if raced is not None and raced is not pinned:
+        # a same-name raced plan is canonically identical to ours, so
+        # releasing it dropped the CacheManager entry both shared;
+        # persist is a no-op when the pin is still cached
+        pinned.persist(StorageLevel.MEMORY_AND_DISK)
     return pinned
 
 

@@ -9,39 +9,35 @@ plain `spark.sql`, not a Python library call.
 Two sources register (``register_lakehouse_sources``):
 
 - ``pydelta``   — Delta-log tables written by streaming/delta_log.py
-  (options: path, version, timestamp_ms). Handles column mapping
-  (scans physical names, projects logical), per-file deletion vectors
-  (the roaring payload rides its file's InputPartition and masks rows
-  by row index on the worker), partition pruning from the log's
-  partitionValues, and stats pruning from each add action's ``stats``
-  JSON (minValues/maxValues/nullCount).
+  (options: path, version, timestamp_ms, partition_filter). Planning
+  is streaming/delta_log.plan_scan_delta — the SAME log replay and
+  partitionValues pruner read_delta uses. Handles column mapping
+  (scans physical names, projects logical) and per-file deletion
+  vectors (the roaring payload rides its file's InputPartition and
+  masks rows by row index on the worker).
 - ``pyiceberg`` — Iceberg v1/v2 tables written by streaming/iceberg.py
-  (options: path, snapshot_id, ref, timestamp_ms). Planning is
-  streaming/iceberg.plan_scan_iceberg — the SAME manifest walk the
-  library read uses, so SQL reads prune identically BY CONSTRUCTION.
-  Position deletes and sequence-scoped equality deletes apply on the
-  workers (merge-on-read), with a per-process decode cache so N file
+  (options: path, snapshot_id, ref, timestamp_ms, partition_filter,
+  stats_filter). Planning is streaming/iceberg.plan_scan_iceberg —
+  the SAME manifest walk the library read uses. Position deletes and
+  sequence-scoped equality deletes apply on the workers
+  (merge-on-read), with a per-process decode cache so N file
   partitions decode each delete Avro once per executor, not N times.
 
-FILTER PUSHDOWN (Spark 4.1 pushFilters, typed Filter objects; needs
-spark.sql.python.filterPushdown.enabled=true — session.py sets it):
-pruning is FILE-level and PARTIAL — every pushed filter is returned to
-Spark for post-scan re-evaluation, so row-level correctness never
-depends on the pruner; the filters only decide which files plan.
-Pushed EqualTo/In on partition columns (Delta) or identity partition
-fields (Iceberg) prune from partition metadata; range/equality
-predicates on data columns prune from file stats bounds. All pruning
-is fail-open: no stats, unknown column, or type mismatch ⇒ scan.
-
-WARNING — known Spark 4.1.2 defect, not fixed here: PythonDataSourceV2
-keeps ONE read plan per loaded relation, so every scan of one loaded
-DataFrame gets the files pruned for its FIRST scan's pushed filters.
-Scanning one `df` twice with different filters loses rows: on a
-g-partitioned table of 200 rows (4 values of g),
-``df.filter("g='1'").union(df.filter("g='2'")).count()`` is 50, not
-100, and ``df.union(df.filter("g='1'")).count()`` is 100, not 250
-(pinned by an xfail test in tests/test_lakehouse_ds.py). Until a fix,
-load the table once per differently-filtered scan.
+FILE PRUNING comes only from the load's options, never from Spark's
+pushed filters. ``partition_filter`` is JSON {column: value or list}
+(a partition column for Delta, a partition FIELD name for Iceberg);
+``stats_filter`` is JSON {column: [lo, hi]}, null for an open bound.
+Both are the library readers' own arguments, handed to the shared
+planners, so a SQL read prunes exactly as read_delta / read_iceberg
+do BY CONSTRUCTION. Pruning is an optimization: the query's WHERE
+still filters rows. One load is one relation, so a per-load file set
+is sound. Pushed filters are not: Spark 4.1.2's PythonDataSourceV2
+plans the partitions in the same worker call that receives the pushed
+filters and keeps that ONE plan for every later scan of the loaded
+relation, so pruning from them made
+``df.filter("g='1'").union(df.filter("g='2'"))`` lose the second
+branch's files (tests/test_lakehouse_ds.py pins both formats and the
+SQL-view shape).
 
 The ``scan_report`` option names a JSON file the planner writes
 {"files_total", "files_scanned"} into — the certification hook that
@@ -65,15 +61,7 @@ import os
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    EqualNullSafe,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    LessThan,
-    LessThanOrEqual,
 )
 from pyspark.sql.types import StructType
 
@@ -123,78 +111,26 @@ def _project(tbl, out_names: list[str], src_names: list[str],
     return pa.Table.from_arrays(arrays, names=out_names)
 
 
-# ------------------------------------------------------- pushed filters
+# ----------------------------------------------------------- options
 
 
-def _filter_column(f) -> str | None:
-    """Single-part attribute name, else None (nested paths fail open)."""
-    attr = getattr(f, "attribute", None)
-    if isinstance(attr, tuple) and len(attr) == 1:
-        return attr[0]
-    return None
+def _json_option(options: dict, key: str):
+    raw = options.get(key)
+    return json.loads(raw) if raw else None
 
 
-def _collect_pushed(filters) -> tuple[dict, dict, set]:
-    """Split pushed filters into (eq: {col: [values]},
-    rng: {col: (lo, hi)}, notnull: {col}). Conservative by design:
-    eq-sets and CLOSED ranges (strictness re-applied by Spark's
-    post-scan filter, so boundary files always survive)."""
-    eq: dict[str, list] = {}
-    rng: dict[str, list] = {}  # col -> [lo, hi]
-    notnull: set[str] = set()
-    for f in filters:
-        col = _filter_column(f)
-        if col is None:
-            continue
-        try:
-            if isinstance(f, (EqualTo, EqualNullSafe)):
-                if f.value is None:
-                    continue  # Spark emits IsNull for these; fail open
-                eq.setdefault(col, []).append(f.value)
-                b = rng.setdefault(col, [None, None])
-                b[0] = f.value if b[0] is None else max(b[0], f.value)
-                b[1] = f.value if b[1] is None else min(b[1], f.value)
-            elif isinstance(f, In):
-                eq.setdefault(col, []).extend(f.value)
-                vals = [v for v in f.value if v is not None]
-                if vals:
-                    # an IN-set also bounds a CLOSED range [min, max]
-                    # for stats pruning — conservative (files between
-                    # members still scan), sound (no member outside)
-                    b = rng.setdefault(col, [None, None])
-                    lo, hi = min(vals), max(vals)
-                    b[0] = lo if b[0] is None else max(b[0], lo)
-                    b[1] = hi if b[1] is None else min(b[1], hi)
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                if f.value is None:
-                    continue
-                b = rng.setdefault(col, [None, None])
-                b[0] = f.value if b[0] is None else max(b[0], f.value)
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                if f.value is None:
-                    continue
-                b = rng.setdefault(col, [None, None])
-                b[1] = f.value if b[1] is None else min(b[1], f.value)
-            elif isinstance(f, IsNotNull):
-                notnull.add(col)
-        except TypeError:
-            rng.pop(col, None)  # incomparable value mix: fail open
-    return eq, {c: (lo, hi) for c, (lo, hi) in rng.items()}, notnull
+def _delta_time_travel_kw(options: dict) -> dict:
+    return {k: int(options[k]) for k in ("version", "timestamp_ms")
+            if options.get(k) is not None}
 
 
-def _comparable(a, b) -> bool:
-    num = (int, float)
-    return (isinstance(a, num) and isinstance(b, num)) or (
-        isinstance(a, str) and isinstance(b, str))
-
-
-def _write_scan_report(options: dict, total: int, scanned: int) -> None:
+def _write_scan_report(options: dict, stats: dict) -> None:
     path = options.get("scan_report")
     if not path:
         return
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"files_total": total, "files_scanned": scanned}, f)
+        json.dump(stats, f)  # {files_total, files_scanned}
     os.replace(tmp, path)
 
 
@@ -205,9 +141,8 @@ class DeltaFilePart(InputPartition):
     """Carries EVERYTHING read() needs: Spark pickles the reader for
     executors BEFORE partitions() runs, so planning-time mutations to
     the reader object are invisible on the read side (verified
-    empirically — only pushFilters-time mutations ship). The
-    projection spec is O(columns) per partition; the DV payload is
-    that file's own compressed bitmap only."""
+    empirically). The projection spec is O(columns) per partition;
+    the DV payload is that file's own compressed bitmap only."""
 
     def __init__(self, rel: str, dv_payload: bytes | None,
                  src_names: list[str], out_names: list[str],
@@ -241,46 +176,27 @@ class PyDeltaReader(DataSourceReader):
         if not self.table:
             raise ValueError("pydelta needs a 'path' option")
         self.options = dict(options)
-        self.pushed: list = []
-
-    def pushFilters(self, filters):
-        self.pushed = [f for f in filters if _filter_column(f)]
-        # PARTIAL pushdown: Spark re-applies everything post-scan —
-        # the pruner only has to be sound at file granularity
-        return filters
 
     def partitions(self):
         from postrack_spark.streaming.delta_log import (
             _column_mapping,
-            _partition_columns,
-            _replay,
-            version_at_timestamp_delta,
+            plan_scan_delta,
         )
         from postrack_spark.streaming.deletion_vectors import load_dv_bytes
 
         if str(self.options.get("readchangefeed", "false")).lower() == "true":
             return self._cdf_partitions()
-        version = self.options.get("version")
-        ts = self.options.get("timestamp_ms")
-        if ts is not None:
-            version = version_at_timestamp_delta(self.table, int(ts))
-        live, schema_string, _v, _t, config = _replay(
-            self.table, int(version) if version is not None else None)
-        pcols = set(_partition_columns(
-            self.table, int(version) if version is not None else None))
+        rep: dict = {}
+        kept, schema_string, config = plan_scan_delta(
+            self.table,
+            partition_filter=_json_option(self.options, "partition_filter"),
+            scan_stats=rep, **_delta_time_travel_kw(self.options))
+        _write_scan_report(self.options, rep)
         mapping = _column_mapping(schema_string, config) or {}
         fields = json.loads(schema_string)["fields"]
         out_names = [f["name"] for f in fields]
         src_names = [mapping.get(f["name"], f["name"]) for f in fields]
         type_names = [f["type"] for f in fields]
-        eq, rng, notnull = _collect_pushed(self.pushed)
-        acts = list(live.items())
-        kept: list[tuple[str, dict]] = []
-        for p, a in acts:
-            if self._pruned(a, pcols, eq, rng, notnull):
-                continue
-            kept.append((p, a))
-        _write_scan_report(self.options, len(acts), len(kept))
         dv_bytes = load_dv_bytes(self.table, kept)
         return [DeltaFilePart(p, dv_bytes.get(p),
                               src_names, out_names, type_names)
@@ -364,39 +280,6 @@ class PyDeltaReader(DataSourceReader):
             pa.array([partition.version] * n, type=pa.int32()))
         yield from out.to_batches(max_chunksize=1 << 16)
 
-    @staticmethod
-    def _pruned(add: dict, pcols: set, eq: dict, rng: dict,
-                notnull: set) -> bool:
-        pv = add.get("partitionValues") or {}
-        for col, vals in eq.items():
-            if col in pcols and col in pv:
-                # protocol partition values are STRINGS — compare as such
-                if pv[col] not in {str(v) for v in vals}:
-                    return True
-        stats = add.get("stats")
-        if not stats:
-            return False
-        try:
-            st = json.loads(stats)
-        except ValueError:
-            return False
-        mins = st.get("minValues") or {}
-        maxs = st.get("maxValues") or {}
-        for col, (lo, hi) in rng.items():
-            mn, mx = mins.get(col), maxs.get(col)
-            if mn is None or mx is None:
-                continue
-            if lo is not None and _comparable(mx, lo) and mx < lo:
-                return True
-            if hi is not None and _comparable(mn, hi) and mn > hi:
-                return True
-        nulls = st.get("nullCount") or {}
-        nrec = st.get("numRecords")
-        for col in notnull:
-            if nrec is not None and nulls.get(col) == nrec and nrec > 0:
-                return True  # provably all-NULL file
-        return False
-
     def read(self, partition):
         import numpy as np
         import pyarrow.parquet as pq
@@ -431,18 +314,11 @@ class PyDeltaDataSource(DataSource):
         return "pydelta"
 
     def schema(self):
-        from postrack_spark.streaming.delta_log import (
-            _replay,
-            version_at_timestamp_delta,
-        )
+        from postrack_spark.streaming.delta_log import plan_scan_delta
 
         table = self.options.get("path") or self.options.get("table")
-        version = self.options.get("version")
-        ts = self.options.get("timestamp_ms")
-        if ts is not None:
-            version = version_at_timestamp_delta(table, int(ts))
-        _l, schema_string, _v, _t, _c = _replay(
-            table, int(version) if version is not None else None)
+        _kept, schema_string, _c = plan_scan_delta(
+            table, **_delta_time_travel_kw(self.options))
         base = StructType.fromJson(json.loads(schema_string))
         if str(self.options.get("readchangefeed", "false")).lower() == "true":
             # the STREAM read's CDF shape (sources/delta_feed.py)
@@ -547,11 +423,6 @@ class PyIcebergReader(DataSourceReader):
         if not self.table:
             raise ValueError("pyiceberg needs a 'path' option")
         self.options = dict(options)
-        self.pushed: list = []
-
-    def pushFilters(self, filters):
-        self.pushed = [f for f in filters if _filter_column(f)]
-        return filters  # partial pushdown, like pydelta
 
     def _time_travel_kw(self) -> dict:
         kw: dict = {}
@@ -564,41 +435,15 @@ class PyIcebergReader(DataSourceReader):
         return kw
 
     def partitions(self):
-        from postrack_spark.streaming.iceberg import (
-            _specs,
-            plan_scan_iceberg,
-        )
+        from postrack_spark.streaming.iceberg import plan_scan_iceberg
 
-        eq, rng, _notnull = _collect_pushed(self.pushed)
-        # identity partition fields of the DEFAULT spec prune from
-        # pushed equality sets; hidden transforms (bucket/year/…) stay
-        # on the explicit option (applying a transform to a pushed
-        # value is spec-correct but out of this lane's scope)
-        from postrack_spark.streaming.iceberg import _current_metadata
-
-        meta = _current_metadata(self.table)
-        if meta is None:
-            raise FileNotFoundError(f"no iceberg metadata under {self.table}")
-        specs, default_sid = _specs(meta)
-        src_name = {f["id"]: f["name"] for f in meta["schema"]["fields"]}
-        part_filter: dict = {}
-        for pf in specs.get(default_sid, []):
-            if pf.get("transform") != "identity":
-                continue
-            col = src_name.get(pf["source-id"])
-            if col in eq:
-                part_filter[pf["name"]] = eq[col]
-        if self.options.get("partition_filter"):
-            part_filter.update(json.loads(self.options["partition_filter"]))
-        stats_filter = {c: b for c, b in rng.items()} or None
         rep: dict = {}
         plan = plan_scan_iceberg(
-            self.table, partition_filter=part_filter or None,
-            stats_filter=stats_filter, scan_stats=rep,
-            **self._time_travel_kw())
-        _write_scan_report(self.options,
-                           rep.get("files_total", len(plan["paths"])),
-                           rep.get("files_scanned", len(plan["paths"])))
+            self.table,
+            partition_filter=_json_option(self.options, "partition_filter"),
+            stats_filter=_json_option(self.options, "stats_filter"),
+            scan_stats=rep, **self._time_travel_kw())
+        _write_scan_report(self.options, rep)
         fields = plan["meta"]["schema"]["fields"]
         ice_to_py = {"long": "long", "int": "integer", "double": "double",
                      "float": "float", "string": "string",
@@ -729,9 +574,7 @@ class PyIcebergDataSource(DataSource):
 
 
 def register_lakehouse_sources(spark) -> None:
-    """Idempotent registration of both batch sources (+ the pushdown
-    conf they need)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Idempotent registration of both batch sources."""
     spark.dataSource.register(PyDeltaDataSource)
     spark.dataSource.register(PyIcebergDataSource)
 

@@ -38,15 +38,12 @@ its rows land in the same columns.
 
 No ``pushFilters``: the reader always decodes every admitted event, and
 ``apply_changes`` scans it once per action instead. Push-down would be
-unsafe on Spark 4.1.2 for two reasons. (a) ``PythonDataSourceV2`` keeps
-one read plan per loaded relation, so every scan of one DataFrame gets
-the reader pushed by its first scan, and two differently-filtered scans
-of one DataFrame (say, in a union) lose rows. (b) A reader that implements ``pushFilters`` raises
-``DATA_SOURCE_PUSHDOWN_DISABLED`` in any session without
-``spark.sql.python.filterPushdown.enabled``; ``session.get_spark``
-does not set it (only ``configure_session`` does).
-``pydelta`` (sources.lakehouse_ds) does prune files from pushed
-filters and carries defect (a).
+unsafe on Spark 4.1.2: ``PythonDataSourceV2`` keeps one read plan per
+loaded relation, so every scan of one DataFrame gets the reader pushed
+by its first scan, and two differently-filtered scans of one DataFrame
+(say, in a union) lose rows. The lakehouse sources
+(sources.lakehouse_ds) prune files from per-load options for the same
+reason.
 """
 
 from __future__ import annotations

@@ -1886,20 +1886,22 @@ def version_at_timestamp_delta(table: str, ts_ms: int) -> int:
     return best
 
 
-def read_delta(spark: SparkSession, table: str,
-               version: int | None = None,
-               timestamp_ms: int | None = None,
-               partition_filter: dict | None = None,
-               scan_stats: dict | None = None) -> DataFrame:
-    """Snapshot read (latest, or time travel to ``version``). Live
-    files carrying deletion vectors read through the DV filter
-    (streaming/deletion_vectors.py) — marked rows drop at scan time;
-    DV-free snapshots keep the plain pushdown-friendly scan.
+def plan_scan_delta(table: str,
+                    version: int | None = None,
+                    timestamp_ms: int | None = None,
+                    partition_filter: dict | None = None,
+                    scan_stats: dict | None = None,
+                    ) -> tuple[list[tuple[str, dict]], str, dict]:
+    """The log-replay PLANNING half of read_delta, shared with the
+    batch DataSource lane (sources/lakehouse_ds.py pydelta) so SQL
+    reads prune identically to library reads by construction — the
+    Delta twin of iceberg.plan_scan_iceberg. Returns (live
+    [(rel path, add action)], schema_string, config). O(files) driver
+    metadata; no data file is opened.
 
     ``partition_filter`` ({partition column: value or list}) prunes
     FILES from the log's partitionValues metadata before any footer
-    opens — the Delta twin of read_iceberg's hidden-partitioning
-    pruner. Values compare as the protocol's partition STRINGS
+    opens. Values compare as the protocol's partition STRINGS
     (str(v)); files without a recorded value fail open. Pruning is an
     OPTIMIZATION — callers still apply the row filter. ``scan_stats``
     (out-param) receives files_total / files_scanned so callers can
@@ -1910,6 +1912,7 @@ def read_delta(spark: SparkSession, table: str,
         version = version_at_timestamp_delta(table, timestamp_ms)
     live, schema_string, _v, _txns, config = _replay(table, version)
     acts = list(live.items())
+    kept = acts
     if partition_filter:
         kept = []
         for p, a in acts:
@@ -1925,10 +1928,27 @@ def read_delta(spark: SparkSession, table: str,
                     break
             if not pruned:
                 kept.append((p, a))
-        if scan_stats is not None:
-            scan_stats["files_total"] = len(acts)
-            scan_stats["files_scanned"] = len(kept)
-        acts = kept
+    if scan_stats is not None:
+        scan_stats["files_total"] = len(acts)
+        scan_stats["files_scanned"] = len(kept)
+    return kept, schema_string, config
+
+
+def read_delta(spark: SparkSession, table: str,
+               version: int | None = None,
+               timestamp_ms: int | None = None,
+               partition_filter: dict | None = None,
+               scan_stats: dict | None = None) -> DataFrame:
+    """Snapshot read (latest, or time travel to ``version``). Live
+    files carrying deletion vectors read through the DV filter
+    (streaming/deletion_vectors.py) — marked rows drop at scan time;
+    DV-free snapshots keep the plain pushdown-friendly scan.
+
+    Files plan through plan_scan_delta (``partition_filter`` prunes
+    from partitionValues; ``scan_stats`` certifies it)."""
+    acts, schema_string, config = plan_scan_delta(
+        table, version=version, timestamp_ms=timestamp_ms,
+        partition_filter=partition_filter, scan_stats=scan_stats)
     schema = StructType.fromJson(json.loads(schema_string))
     if not acts:
         return spark.createDataFrame([], schema)

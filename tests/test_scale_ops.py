@@ -508,6 +508,53 @@ def test_pin_small_concurrent_registry_safe(spark, sf_dir):
             df.unpersist()
 
 
+def test_pin_small_same_name_race_keeps_pin_cached(spark, monkeypatch):
+    """Another thread pins the same name, with a canonically identical
+    plan, between pin_small's two critical sections. Both persists
+    share one CacheManager entry, so releasing the displaced raced
+    frame dropped the survivor's cache too: the registered pin was
+    never materialized. Injected deterministically by wrapping
+    _PIN_LOCK so the raced entry lands as the second section opens."""
+    from pyspark import StorageLevel
+
+    from postrack_spark import session as S
+
+    name = "pin_same_name_race"
+
+    def frame():
+        return spark.range(7).selectExpr("id * 2 AS x")
+
+    real_lock = S._PIN_LOCK
+    entered = []
+
+    class InjectingLock:
+        def __enter__(self):
+            real_lock.acquire()
+            entered.append(1)
+            if len(entered) == 2:
+                S._PINNED_SMALL[name] = frame().persist(
+                    StorageLevel.MEMORY_AND_DISK)
+                S._PINNED_ORDER.append(name)
+            return self
+
+        def __exit__(self, *exc):
+            real_lock.release()
+
+    monkeypatch.setattr(S, "_PIN_LOCK", InjectingLock())
+    try:
+        pinned = S.pin_small(name, frame())
+        assert len(entered) == 2
+        assert S._PINNED_SMALL[name] is pinned
+        assert pinned.storageLevel != StorageLevel.NONE
+    finally:
+        monkeypatch.setattr(S, "_PIN_LOCK", real_lock)
+        with S._PIN_LOCK:
+            left = S._PINNED_SMALL.pop(name, None)
+            S._PINNED_ORDER[:] = [n for n in S._PINNED_ORDER if n != name]
+        if left is not None:
+            left.unpersist()
+
+
 def test_ivf_assign_unique_id_contract(spark):
     """ivf_assign carries the input's payload columns through the
     aggregate via first() — value-deterministic ONLY because ids are
