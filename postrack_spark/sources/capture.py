@@ -19,7 +19,9 @@ Semantics vs the reference:
   decoder sees what a Go-side consumer would.
 * Ack cadence ≡ keepAlive every 5 s (postrack.go:103,107-117) — but
   the LSN acked is the last one DURABLY renamed into a completed
-  ``.pgout`` file, never the last one merely received. The reference
+  ``.pgout`` file, never the last one merely received. Durable means
+  fsynced: ``write_frame_file`` fsyncs the file before the rename and
+  the directory after it, so an OS crash cannot lose an acked file. The reference
   acks ``conn.lsn`` which its handler advances BEFORE the callback
   runs (race q3, SURVEY.md §1.1): crash after ack, lose the event.
   Ack-after-durable closes that hole end to end, matching the
@@ -150,7 +152,8 @@ class FrameFileWriter:
         independent; subclasses (sources/kafka_transport.py) override
         only this to publish the roll elsewhere. MUST be durable on
         return — durable_lsn (and therefore the Postgres ack) advances
-        right after."""
+        right after; the file transport fsyncs the file and its
+        directory (``write_frame_file``)."""
         path = os.path.join(self.out_dir, f"{self.seq:012d}{FRAME_FILE_SUFFIX}")
         write_frame_file(path, frames)
 

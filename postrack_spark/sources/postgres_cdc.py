@@ -3,8 +3,10 @@ pgoutput stream as batch or streaming DataFrames with CHANGE_SCHEMA.
 
 Architecture (north star, BASELINE.json): WAL capture runs OUTSIDE
 Spark — a capture process (the Conn/bootstrap layer + live Postgres)
-appends frame files to `capture_dir`. Spark reads those files, decodes
-pgoutput (sources.pgoutput), and plans the rest declaratively.
+appends frame files to `capture_dir` (``write_frame_file``: fsync,
+atomic rename, directory fsync — durable before the capture acks).
+Spark reads those files, decodes pgoutput (sources.pgoutput), and plans
+the rest declaratively.
 
 Capture-file contract:
   - files sort lexicographically in stream order (e.g. zero-padded
@@ -96,11 +98,22 @@ def blob_to_frames(data: bytes) -> list[bytes]:
 
 
 def write_frame_file(path: str, frames: list[bytes]) -> None:
-    """Capture-side helper: length-prefixed frames, atomic rename."""
+    """Capture-side helper: length-prefixed frames, durable atomic
+    rename. The temp file is fsynced before the rename and the directory
+    after it: the capture daemon acks the file's LSNs to Postgres as
+    soon as this returns, so after an OS crash the file must be there,
+    whole, or the slot has moved past events no file holds."""
     tmp = path + ".tmp"
     with open(tmp, "wb") as f:
         f.write(frames_to_blob(frames))
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, path)
+    dir_fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
 
 
 def read_frame_file(path: str) -> list[bytes]:

@@ -6,13 +6,24 @@ read by keepAlive at :110 with no ordering w.r.t. the callback).
 
 Durability model (round 3): foreachBatch is AT-LEAST-ONCE — a crash
 between applying a batch and committing the checkpoint re-delivers the
-same (batch_id, data) on restart. Both sinks therefore write through a
-tiny versioned-table layout::
+same (batch_id, data) on restart. Every sink therefore commits through
+a ``_CURRENT`` pointer file, swapped atomically (tmp file +
+os.replace), in one of three layouts:
+
+* versioned (:func:`_versioned_batch`) — apply_changes,
+  incremental_agg, incremental_join_agg, fold, merge_fold,
+  cluster_maintenance and scd2 write the whole view per batch::
 
     target/
-      _CURRENT        # "<checkpoint>\\n<batch_id>\\n<version dir>",
-                      # swapped atomically (tmp file + os.replace)
+      _CURRENT        # "<checkpoint>\\n<batch_id>\\n<version dir>"
       v00000007/      # parquet written by batch 7 (fresh dir per batch)
+
+* log-structured (:func:`_log_structured_batch`) — the ``*_log`` sinks
+  append each batch's partial aggregate as a ``d`` dir and fold the
+  deltas into a ``v`` base on compaction (layout at that section);
+* pair index (:func:`_pair_index_batch`) — dedup_index and ann_index
+  append ``index/d<batch>`` and ``pairs/d<batch>`` dirs; compaction
+  folds them into ``c<batch>`` bases named on the pointer's third line.
 
 which yields exactly-once EFFECTS from at-least-once DELIVERY:
 
@@ -54,22 +65,44 @@ from postrack_spark.cdc.materialize import apply_changes
 _POINTER = "_CURRENT"
 
 
-def _read_pointer(target: str) -> tuple[str | None, int, str | None]:
-    """(checkpoint lineage, applied batch id, version path) or
-    (None, -1, None) when the view has no committed version yet."""
+def _pointer_lines(target: str) -> list[str] | None:
     path = os.path.join(target, _POINTER)
     if not os.path.exists(path):
-        return None, -1, None
-    lineage, batch_id, version = open(path).read().splitlines()[:3]
-    return lineage, int(batch_id), os.path.join(target, version)
+        return None
+    with open(path) as f:
+        return f.read().splitlines()
 
 
-def _swap_pointer(target: str, lineage: str, batch_id: int, version: str) -> None:
+def _write_pointer(target: str, *lines) -> None:
     """Atomically repoint _CURRENT (POSIX rename within the dir)."""
     tmp = os.path.join(target, f".{_POINTER}.tmp")
     with open(tmp, "w") as f:
-        f.write(f"{lineage}\n{batch_id}\n{version}\n")
+        f.write("".join(f"{line}\n" for line in lines))
     os.replace(tmp, os.path.join(target, _POINTER))
+
+
+def _read_pointer(target: str) -> tuple[str | None, int, str | None]:
+    """(checkpoint lineage, applied batch id, version dir name) or
+    (None, -1, None) when the view has no committed version yet. A pair
+    index stores its compacted base name there, empty (None) until the
+    first compaction."""
+    lines = _pointer_lines(target)
+    if lines is None:
+        return None, -1, None
+    version = lines[2] if len(lines) > 2 and lines[2] else None
+    return lines[0], int(lines[1]), version
+
+
+def _swap_pointer(target: str, lineage: str, batch_id: int,
+                  version: str | None) -> None:
+    _write_pointer(target, lineage, batch_id, version or "")
+
+
+def _version_names(target: str) -> list[str]:
+    return sorted(
+        name for name in os.listdir(target)
+        if name.startswith("v") and name[1:].isdigit()
+    )
 
 
 def _gc_versions(target: str, keep_depth: int, live: str) -> None:
@@ -79,10 +112,7 @@ def _gc_versions(target: str, keep_depth: int, live: str) -> None:
     window). The live dir is pinned by name, not by sort order: a
     fresh lineage restarts batch ids at 0, so the live version can be
     lexicographically OLDEST."""
-    versions = sorted(
-        name for name in os.listdir(target)
-        if name.startswith("v") and name[1:].isdigit()
-    )
+    versions = _version_names(target)
     keep = set(versions[-keep_depth:]) if keep_depth else set()
     keep.add(live)
     for name in versions:
@@ -107,16 +137,12 @@ def read_view(spark: SparkSession, target: str,
     _, _, live = _read_pointer(target)
     if live is None:
         raise FileNotFoundError(f"no committed version under {target}")
-    return spark.read.parquet(live)
+    return spark.read.parquet(os.path.join(target, live))
 
 
 def list_versions(target: str) -> list[int]:
     """Batch ids of the retained version snapshots (ascending)."""
-    return sorted(
-        int(name[1:])
-        for name in os.listdir(target)
-        if name.startswith("v") and name[1:].isdigit()
-    )
+    return sorted(int(name[1:]) for name in _version_names(target))
 
 
 def _versioned_batch(target: str, lineage: str, merge, keep_depth: int = 2):
@@ -130,15 +156,143 @@ def _versioned_batch(target: str, lineage: str, merge, keep_depth: int = 2):
         if applied_lineage == lineage and batch_id <= applied_id:
             return  # at-least-once re-delivery of an applied batch
         spark = batch_df.sparkSession
-        base = spark.read.parquet(version) if version is not None else None
+        base = (
+            spark.read.parquet(os.path.join(target, version))
+            if version is not None else None
+        )
         merged = merge(base, batch_df)
         vname = f"v{batch_id:08d}"
-        vpath = os.path.join(target, vname)
-        merged.write.mode("overwrite").parquet(vpath)
+        merged.write.mode("overwrite").parquet(os.path.join(target, vname))
         _swap_pointer(target, lineage, batch_id, vname)
         _gc_versions(target, keep_depth, vname)
 
     return apply_batch
+
+
+def _dirs(target_dir: str | None, checkpoint_dir: str | None,
+          prefix: str) -> tuple[str, str]:
+    """The sink's (target, checkpoint) dirs: the caller's, or fresh
+    temp dirs named after the sink."""
+    return (
+        target_dir or tempfile.mkdtemp(prefix=f"{prefix}_"),
+        checkpoint_dir or tempfile.mkdtemp(prefix=f"ckpt_{prefix}_"),
+    )
+
+
+def _start(stream: DataFrame, target: str, checkpoint: str,
+           apply_batch) -> tuple[str, object]:
+    """Run ``apply_batch`` on each micro-batch of everything available
+    now, checkpointed at ``checkpoint`` (the apply functions take the
+    same path as their lineage); returns (target_dir, streaming_query)."""
+    query = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return target, query
+
+
+def _check_drift(target: str, base: DataFrame, batch_cols,
+                 what: str = "view") -> None:
+    if set(base.columns) != set(batch_cols):
+        raise ValueError(
+            f"{what} schema drift under {target}: "
+            f"base={sorted(base.columns)} batch={sorted(batch_cols)}"
+        )
+
+
+def _resum(group_cols, sum_cols):
+    """``df -> df.groupBy(group_cols)`` re-sum of ``sum_cols``, each
+    cast to bigint: the re-aggregation of every additive view."""
+
+    def reagg(df: DataFrame) -> DataFrame:
+        return df.groupBy(*[F.col(c) for c in group_cols]).agg(
+            *[F.sum(c).cast("bigint").alias(c) for c in sum_cols]
+        )
+
+    return reagg
+
+
+def _fold_merge(target: str, partial, reagg):
+    """The versioned merge of every fold sink: the batch's partial
+    aggregate ``partial(batch)`` starts the view; later batches fold
+    into it as ``reagg(base ∪ partial)`` — a MERGE INTO on the group
+    columns at warehouse scale."""
+
+    def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = partial(batch_df)
+        if base is None:
+            return part
+        _check_drift(target, base, part.columns)
+        return reagg(base.unionByName(part))
+
+    return merge
+
+
+def _signed_partial(dims: dict, measures: dict, count_name: str):
+    """``batch -> partial``: the batch's signed delta rows (cdc/ivm's
+    delta_rows) aggregated to per-group (count, sums). Map-side partial
+    aggregation compacts the signed rows before the exchange, so the
+    shuffle is O(groups), never O(events)."""
+    from postrack_spark.cdc.ivm import delta_rows
+
+    def partial(batch_df: DataFrame) -> DataFrame:
+        return (
+            delta_rows(batch_df)
+            .select(
+                *[expr.alias(n) for n, expr in dims.items()], "sign",
+                F.col("img").alias("img"),
+            )
+            .groupBy(*[F.col(n) for n in dims])
+            .agg(
+                F.sum("sign").cast("bigint").alias(count_name),
+                *[
+                    F.sum(F.col("sign") * expr).cast("bigint").alias(n)
+                    for n, expr in measures.items()
+                ],
+            )
+        )
+
+    return partial
+
+
+def _join_partial(stream_cols: dict, static_signed: DataFrame, on: list,
+                  dims: dict, measures: dict, count_name: str):
+    """``batch -> partial`` of a STREAM ⋈ STATIC view: the view delta
+    is exactly ΔA ⋈ B, so the batch's (tiny) signed rows are broadcast
+    into the static side and partially aggregated."""
+    from postrack_spark.cdc.ivm import _signed_agg, _signed_join, signed_image_rows
+
+    def partial(batch_df: DataFrame) -> DataFrame:
+        da = signed_image_rows(batch_df, stream_cols)
+        joined = _signed_join(F.broadcast(da), static_signed, on)
+        return _signed_agg(joined, dims, measures, count_name)
+
+    return partial
+
+
+def _write_batch(df: DataFrame, path: str, feed_dir: str | None = None) -> None:
+    """Write one batch's dir (overwrite: a crash-retried batch rewrites
+    its own dir). With ``feed_dir``, the dir is one parquet file, also
+    published as ``feed_dir/<dir name>.parquet`` — a change feed for
+    downstream consumers, idempotent under crash-retry (deterministic
+    name + atomic rename)."""
+    if feed_dir is not None:
+        df = df.coalesce(1)  # one deterministic feed file per batch
+    df.write.mode("overwrite").parquet(path)
+    if feed_dir is None:
+        return
+    os.makedirs(feed_dir, exist_ok=True)
+    name = os.path.basename(path)
+    src = next(
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+    tmp = os.path.join(feed_dir, f".{name}.tmp")
+    shutil.copyfile(src, tmp)
+    os.replace(tmp, os.path.join(feed_dir, f"{name}.parquet"))
 
 
 def foreach_batch_apply_changes(
@@ -165,30 +319,18 @@ def foreach_batch_apply_changes(
     re-delivery of the DATA itself (new lineage replays converge).
     Returns (target_dir, streaming_query); read with ``read_view``.
     """
-    target = target_dir or tempfile.mkdtemp(prefix="cdc_materialized_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_apply_")
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "cdc_materialized")
 
     def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         if base is None:
             return apply_changes(batch_df, key_expr, key_name)
-        if set(base.columns) != {*batch_df.columns, key_name}:
-            raise ValueError(
-                f"view schema drift under {target}: "
-                f"base={sorted(base.columns)} batch={sorted({*batch_df.columns, key_name})}"
-            )
+        _check_drift(target, base, {*batch_df.columns, key_name})
         return apply_changes(
             base.drop(key_name).unionByName(batch_df), key_expr, key_name
         )
 
-    query = (
-        changes_stream.writeStream.foreachBatch(
-            _versioned_batch(target, checkpoint, merge, keep_depth)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    return _start(changes_stream, target, checkpoint,
+                  _versioned_batch(target, checkpoint, merge, keep_depth))
 
 
 def foreach_batch_incremental_agg(
@@ -225,52 +367,13 @@ def foreach_batch_incremental_agg(
     partial aggregation compacts the signed rows before the exchange.
     Returns (target_dir, streaming_query); read with ``read_view``.
     """
-    from postrack_spark.cdc.ivm import delta_rows
-
-    target = target_dir or tempfile.mkdtemp(prefix="ivm_agg_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_ivm_")
-    dim_names = list(dims)
-    sum_names = [count_name, *measures]
-
-    def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        d = delta_rows(batch_df)
-        part = (
-            d.select(
-                *[expr.alias(n) for n, expr in dims.items()],
-                "sign",
-                F.col("img").alias("img"),
-            )
-            .groupBy(*[F.col(n) for n in dim_names])
-            .agg(
-                F.sum("sign").cast("bigint").alias(count_name),
-                *[
-                    F.sum(F.col("sign") * expr).cast("bigint").alias(n)
-                    for n, expr in measures.items()
-                ],
-            )
-        )
-        if base is None:
-            return part
-        if set(base.columns) != set(part.columns):
-            raise ValueError(
-                f"view schema drift under {target}: "
-                f"base={sorted(base.columns)} batch={sorted(part.columns)}"
-            )
-        return (
-            base.unionByName(part)
-            .groupBy(*[F.col(n) for n in dim_names])
-            .agg(*[F.sum(n).cast("bigint").alias(n) for n in sum_names])
-        )
-
-    query = (
-        changes_stream.writeStream.foreachBatch(
-            _versioned_batch(target, checkpoint, merge, keep_depth)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "ivm_agg")
+    merge = _fold_merge(
+        target, _signed_partial(dims, measures, count_name),
+        _resum(dims, [count_name, *measures]),
     )
-    return target, query
+    return _start(changes_stream, target, checkpoint,
+                  _versioned_batch(target, checkpoint, merge, keep_depth))
 
 
 def foreach_batch_incremental_join_agg(
@@ -305,39 +408,14 @@ def foreach_batch_incremental_join_agg(
     same versioned skip/write/swap protocol as the other sinks.
     Returns (target_dir, streaming_query); read with ``read_view``.
     """
-    from postrack_spark.cdc.ivm import _signed_agg, _signed_join, signed_image_rows
-
-    target = target_dir or tempfile.mkdtemp(prefix="ivm_join_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_ivmj_")
-    dim_names = list(dims)
-    sum_names = [count_name, *measures]
-
-    def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        da = signed_image_rows(batch_df, stream_cols)
-        joined = _signed_join(F.broadcast(da), static_signed, on)
-        part = _signed_agg(joined, dims, measures, count_name)
-        if base is None:
-            return part
-        if set(base.columns) != set(part.columns):
-            raise ValueError(
-                f"view schema drift under {target}: "
-                f"base={sorted(base.columns)} batch={sorted(part.columns)}"
-            )
-        return (
-            base.unionByName(part)
-            .groupBy(*[F.col(n) for n in dim_names])
-            .agg(*[F.sum(n).cast("bigint").alias(n) for n in sum_names])
-        )
-
-    query = (
-        changes_stream.writeStream.foreachBatch(
-            _versioned_batch(target, checkpoint, merge, keep_depth)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "ivm_join")
+    merge = _fold_merge(
+        target,
+        _join_partial(stream_cols, static_signed, on, dims, measures, count_name),
+        _resum(dims, [count_name, *measures]),
     )
-    return target, query
+    return _start(changes_stream, target, checkpoint,
+                  _versioned_batch(target, checkpoint, merge, keep_depth))
 
 
 # ---------------------------------------------------------------------------
@@ -366,10 +444,9 @@ def foreach_batch_incremental_join_agg(
 
 
 def _read_pointer_log(target: str):
-    path = os.path.join(target, _POINTER)
-    if not os.path.exists(path):
+    lines = _pointer_lines(target)
+    if lines is None:
         return None, -1, None, [], []
-    lines = open(path).read().splitlines()
     lineage, batch_id, base = lines[0], int(lines[1]), lines[2]
     sums = lines[3].removeprefix("sums:").split(",") if len(lines) > 3 else []
     deltas = [d for d in (lines[4].split(",") if len(lines) > 4 else []) if d]
@@ -377,13 +454,10 @@ def _read_pointer_log(target: str):
 
 
 def _swap_pointer_log(target, lineage, batch_id, base, sums, deltas):
-    tmp = os.path.join(target, f".{_POINTER}.tmp")
-    with open(tmp, "w") as f:
-        f.write(
-            f"{lineage}\n{batch_id}\n{base or '-'}\n"
-            f"sums:{','.join(sums)}\n{','.join(deltas)}\n"
-        )
-    os.replace(tmp, os.path.join(target, _POINTER))
+    _write_pointer(
+        target, lineage, batch_id, base or "-",
+        f"sums:{','.join(sums)}", ",".join(deltas),
+    )
 
 
 def read_log_view(spark: SparkSession, target: str) -> DataFrame:
@@ -396,10 +470,7 @@ def read_log_view(spark: SparkSession, target: str) -> DataFrame:
     if base is not None:
         parts.insert(0, base if os.path.isabs(base) else os.path.join(target, base))
     df = spark.read.parquet(*parts)
-    dim_names = [c for c in df.columns if c not in sums]
-    return df.groupBy(*[F.col(n) for n in dim_names]).agg(
-        *[F.sum(n).cast("bigint").alias(n) for n in sums]
-    )
+    return _resum([c for c in df.columns if c not in sums], sums)(df)
 
 
 def compact_log_view(spark: SparkSession, target: str) -> None:
@@ -451,50 +522,16 @@ def _log_structured_batch(
     rows of a change-envelope batch) — the seam that lets join-view
     deltas, or any other signed partial producer, ride the same
     log-structured protocol."""
-    from postrack_spark.cdc.ivm import delta_rows
-
-    dim_names = list(dims)
+    partial = partial_fn or _signed_partial(dims, measures, count_name)
     sums = [count_name, *measures]
-
-    def default_partial(batch_df: DataFrame) -> DataFrame:
-        d = delta_rows(batch_df)
-        return (
-            d.select(
-                *[expr.alias(n) for n, expr in dims.items()], "sign",
-                F.col("img").alias("img"),
-            )
-            .groupBy(*[F.col(n) for n in dim_names])
-            .agg(
-                F.sum("sign").cast("bigint").alias(count_name),
-                *[
-                    F.sum(F.col("sign") * expr).cast("bigint").alias(n)
-                    for n, expr in measures.items()
-                ],
-            )
-        )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         os.makedirs(target, exist_ok=True)
         applied_lineage, applied_id, base, _, deltas = _read_pointer_log(target)
         if applied_lineage == lineage and batch_id <= applied_id:
             return  # at-least-once re-delivery of an applied batch
-        part = (partial_fn or default_partial)(batch_df)
         dname = f"d{batch_id:08d}"
-        if feed_dir is not None:
-            part = part.coalesce(1)  # one deterministic feed file per batch
-        # overwrite: a crash-retried batch rewrites its own dir
-        part.write.mode("overwrite").parquet(os.path.join(target, dname))
-        if feed_dir is not None:
-            os.makedirs(feed_dir, exist_ok=True)
-            dpath = os.path.join(target, dname)
-            src = next(
-                os.path.join(dpath, f)
-                for f in sorted(os.listdir(dpath))
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            tmp = os.path.join(feed_dir, f".{dname}.tmp")
-            shutil.copyfile(src, tmp)
-            os.replace(tmp, os.path.join(feed_dir, f"{dname}.parquet"))
+        _write_batch(partial(batch_df), os.path.join(target, dname), feed_dir)
         new_deltas = deltas + [dname]
         _swap_pointer_log(target, lineage, batch_id, base, sums, new_deltas)
         if len(new_deltas) >= compact_every:
@@ -519,20 +556,11 @@ def foreach_batch_incremental_agg_log(
     semantics as foreach_batch_incremental_agg — readers use
     :func:`read_log_view` and filter count > 0. ``feed_dir`` publishes
     each partial as a view change feed (see _log_structured_batch)."""
-    target = target_dir or tempfile.mkdtemp(prefix="ivm_log_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_ivml_")
-    query = (
-        changes_stream.writeStream.foreachBatch(
-            _log_structured_batch(
-                target, checkpoint, dims, measures, count_name, compact_every,
-                feed_dir=feed_dir,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "ivm_log")
+    return _start(changes_stream, target, checkpoint, _log_structured_batch(
+        target, checkpoint, dims, measures, count_name, compact_every,
+        feed_dir=feed_dir,
+    ))
 
 
 def foreach_batch_fold(
@@ -545,7 +573,8 @@ def foreach_batch_fold(
 ) -> tuple[str, object]:
     """Fold a stream of ALREADY-SIGNED partial aggregate rows into a
     maintained view: per batch, groupBy(group_cols) re-sum(sum_cols)
-    against the stored view (versioned exactly-once protocol).
+    against the stored view (versioned exactly-once protocol) — the
+    :func:`foreach_batch_merge_fold` of a re-sum.
 
     This is the downstream half of a view CASCADE: the upstream log
     sink's ``feed_dir`` emits its per-batch partials; folding those
@@ -554,35 +583,10 @@ def foreach_batch_fold(
     without ever re-reading the raw stream. Commutative monoid ⇒ any
     feed-file batching converges to the same view.
     Returns (target_dir, streaming_query); read with ``read_view``."""
-    target = target_dir or tempfile.mkdtemp(prefix="fold_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_fold_")
-
-    def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        part = batch_df.groupBy(*[F.col(c) for c in group_cols]).agg(
-            *[F.sum(c).cast("bigint").alias(c) for c in sum_cols]
-        )
-        if base is None:
-            return part
-        if set(base.columns) != set(part.columns):
-            raise ValueError(
-                f"view schema drift under {target}: "
-                f"base={sorted(base.columns)} batch={sorted(part.columns)}"
-            )
-        return (
-            base.unionByName(part)
-            .groupBy(*[F.col(c) for c in group_cols])
-            .agg(*[F.sum(c).cast("bigint").alias(c) for c in sum_cols])
-        )
-
-    query = (
-        partials_stream.writeStream.foreachBatch(
-            _versioned_batch(target, checkpoint, merge, keep_depth)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return foreach_batch_merge_fold(
+        partials_stream, group_cols, _resum(group_cols, sum_cols),
+        target_dir, checkpoint_dir, keep_depth,
     )
-    return target, query
 
 
 def foreach_batch_merge_fold(
@@ -602,29 +606,10 @@ def foreach_batch_merge_fold(
     reagg the batch to its partial, union with the stored view, reagg
     once more — O(batch) + O(view groups) work, versioned exactly-once
     protocol, read with ``read_view``."""
-    target = target_dir or tempfile.mkdtemp(prefix="mfold_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_mfold_")
-
-    def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        part = reagg(batch_df)
-        if base is None:
-            return part
-        if set(base.columns) != set(part.columns):
-            raise ValueError(
-                f"view schema drift under {target}: "
-                f"base={sorted(base.columns)} batch={sorted(part.columns)}"
-            )
-        return reagg(base.unionByName(part))
-
-    query = (
-        partials_stream.writeStream.foreachBatch(
-            _versioned_batch(target, checkpoint, merge, keep_depth)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "mfold")
+    return _start(partials_stream, target, checkpoint, _versioned_batch(
+        target, checkpoint, _fold_merge(target, reagg, reagg), keep_depth
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -648,33 +633,14 @@ def _bands_of(sigs: DataFrame, n_hashes: int, band_size: int) -> DataFrame:
     )
 
 
-def _read_pointer_simple(target: str) -> tuple[str | None, int, str | None]:
-    """(lineage, applied batch id, compacted base name or None).
-
-    Live state = base dir (if any) plus the per-batch ``d`` dirs with
-    base_id < id <= applied — so compaction is one atomic pointer swap
-    to a freshly-written ``c<id>`` base, never an in-place rewrite."""
-    path = os.path.join(target, _POINTER)
-    if not os.path.exists(path):
-        return None, -1, None
-    lines = open(path).read().splitlines()
-    base = lines[2] if len(lines) > 2 and lines[2] else None
-    return lines[0], int(lines[1]), base
-
-
-def _swap_pointer_simple(
-    target: str, lineage: str, batch_id: int, base: str | None = None
-) -> None:
-    tmp = os.path.join(target, f".{_POINTER}.tmp")
-    with open(tmp, "w") as f:
-        f.write(f"{lineage}\n{batch_id}\n{base or ''}\n")
-    os.replace(tmp, os.path.join(target, _POINTER))
-
-
 def _live_dirs(root: str, base: str | None, applied_id: int) -> list[str]:
     """Compacted base (if any) + delta dirs newer than it, up to the
     applied id — orphans from a crashed batch (id > applied) and
-    deltas already folded into the base (id <= base_id) excluded."""
+    deltas already folded into the base (id <= base_id) excluded.
+
+    Live state is defined by the pointer's (applied id, base) alone, so
+    compaction is one atomic pointer swap to a freshly-written
+    ``c<id>`` base, never an in-place rewrite."""
     if not os.path.isdir(root):
         return []
     base_id = int(base[1:]) if base else -1
@@ -690,6 +656,36 @@ def _live_dirs(root: str, base: str | None, applied_id: int) -> list[str]:
     return out
 
 
+def _pair_index_batch(target: str, lineage: str, index_rows, pairs_of_batch,
+                      feed_dir: str | None = None):
+    """The pair-index apply function (dedup and ANN indexes). Per batch:
+    ``index_rows(batch_df)`` is written to ``index/d<batch>`` and read
+    back (storage pins the frame for its multiple uses);
+    ``pairs_of_batch(new, old)`` — ``old`` is the live index before
+    this batch, or None — is written to ``pairs/d<batch>``; then the
+    pointer moves to the batch and keeps the compacted base.
+    Crash-retried batches overwrite their own deterministic dirs and
+    replayed batches are skipped, so both the index and the emitted
+    pair set are exactly-once."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        os.makedirs(target, exist_ok=True)
+        applied_lineage, applied_id, base = _read_pointer(target)
+        if applied_lineage == lineage and batch_id <= applied_id:
+            return  # at-least-once re-delivery of an applied batch
+        spark = batch_df.sparkSession
+        dname = f"d{batch_id:08d}"
+        new_path = os.path.join(target, "index", dname)
+        index_rows(batch_df).write.mode("overwrite").parquet(new_path)
+        old_dirs = _live_dirs(os.path.join(target, "index"), base, applied_id)
+        old = spark.read.parquet(*old_dirs) if old_dirs else None
+        pairs = pairs_of_batch(spark.read.parquet(new_path), old)
+        _write_batch(pairs, os.path.join(target, "pairs", dname), feed_dir)
+        _swap_pointer(target, lineage, batch_id, base)
+
+    return apply_batch
+
+
 def compact_pair_index(spark: SparkSession, target: str) -> None:
     """Compact a streaming pair-index target (dedup or ANN): fold the
     live index and pairs dirs into fresh ``c<applied>`` bases and swap
@@ -698,7 +694,7 @@ def compact_pair_index(spark: SparkSession, target: str) -> None:
     before the swap leaves orphan c-dirs and the old state live; after
     the swap, superseded dirs are GC'd (a production deployment would
     retain one epoch for concurrent readers)."""
-    lineage, applied_id, base = _read_pointer_simple(target)
+    lineage, applied_id, base = _read_pointer(target)
     if applied_id < 0:
         return
     cname = f"c{applied_id:08d}"
@@ -711,7 +707,7 @@ def compact_pair_index(spark: SparkSession, target: str) -> None:
         spark.read.parquet(*live).write.mode("overwrite").parquet(
             os.path.join(target, sub, cname)
         )
-    _swap_pointer_simple(target, lineage, applied_id, base=cname)
+    _swap_pointer(target, lineage, applied_id, cname)
     for sub in ("index", "pairs"):
         root = os.path.join(target, sub)
         if not os.path.isdir(root):
@@ -759,6 +755,8 @@ def foreach_batch_dedup_index(
     bh) so the per-batch probe prunes to touched buckets, and
     degenerate-bucket caps are applied at compaction epochs (the batch
     path's max_bucket_size); the local layout keeps per-batch dirs.
+    ``feed_dir`` publishes each batch's pairs as a change feed for
+    downstream consumers — e.g. incremental cluster maintenance.
     Read results with :func:`read_dedup_pairs`."""
     from postrack_spark.functions.text import minhash_expr
     from postrack_spark.operators.dedup import (
@@ -767,36 +765,25 @@ def foreach_batch_dedup_index(
         lsh_candidate_pairs,
     )
 
-    target = target_dir or tempfile.mkdtemp(prefix="dedup_idx_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_didx_")
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "dedup_idx")
     lanes = [f"h{i}" for i in range(n_hashes)]
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(target, exist_ok=True)
-        spark = batch_df.sparkSession
-        applied_lineage, applied_id, base = _read_pointer_simple(target)
-        if applied_lineage == checkpoint and batch_id <= applied_id:
-            return  # at-least-once re-delivery of an applied batch
-        dname = f"d{batch_id:08d}"
+    def index_rows(batch_df: DataFrame) -> DataFrame:
         shingles = doc_shingles(
             batch_df.select(id_col, text_col), id_col, text_col, k=shingle_k
         )
-        per_doc = shingles.groupBy("doc").agg(
+        return shingles.groupBy("doc").agg(
             F.collect_set("tok").alias("toks"),
             *[F.min(minhash_expr(F.col("tok"), i)).alias(f"h{i}") for i in range(n_hashes)],
         )
-        new_path = os.path.join(target, "index", dname)
-        per_doc.write.mode("overwrite").parquet(new_path)
-        new = spark.read.parquet(new_path)
 
+    def pairs_of_batch(new: DataFrame, old: DataFrame | None) -> DataFrame:
         cand = lsh_candidate_pairs(
             new.select("doc", *lanes), n_hashes=n_hashes, band_size=band_size,
             max_bucket_size=1 << 30,
         )
-        old_dirs = _live_dirs(os.path.join(target, "index"), base, applied_id)
         sets_ = new.select("doc", "toks")
-        if old_dirs:
-            old = spark.read.parquet(*old_dirs)
+        if old is not None:
             cross = (
                 _bands_of(old.select("doc", *lanes), n_hashes, band_size)
                 .join(
@@ -815,40 +802,18 @@ def foreach_batch_dedup_index(
             cand = cand.unionByName(cross).distinct()
             sets_ = sets_.unionByName(old.select("doc", "toks"))
         verified = jaccard_pairs_from_arrays(sets_, cand, threshold=threshold)
-        out = verified.select("doc_a", "doc_b", "jaccard")
-        if feed_dir is not None:
-            out = out.coalesce(1)  # one deterministic feed file per batch
-        pairs_path = os.path.join(target, "pairs", dname)
-        out.write.mode("overwrite").parquet(pairs_path)
-        if feed_dir is not None:
-            # publish the batch's pairs as a change feed (idempotent:
-            # deterministic name + atomic rename) for downstream
-            # consumers — e.g. incremental cluster maintenance
-            os.makedirs(feed_dir, exist_ok=True)
-            src = next(
-                os.path.join(pairs_path, f)
-                for f in sorted(os.listdir(pairs_path))
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            tmp = os.path.join(feed_dir, f".{dname}.tmp")
-            shutil.copyfile(src, tmp)
-            os.replace(tmp, os.path.join(feed_dir, f"{dname}.parquet"))
-        _swap_pointer_simple(target, checkpoint, batch_id, base=base)
+        return verified.select("doc_a", "doc_b", "jaccard")
 
-    query = (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    return _start(docs_stream, target, checkpoint, _pair_index_batch(
+        target, checkpoint, index_rows, pairs_of_batch, feed_dir
+    ))
 
 
 def read_dedup_pairs(spark: SparkSession, target: str) -> DataFrame:
     """All near-dup pairs the streaming index has emitted so far
     (committed batches only — orphan dirs from a crashed batch are
     excluded by the pointer's applied id)."""
-    _, applied_id, base = _read_pointer_simple(target)
+    _, applied_id, base = _read_pointer(target)
     dirs = _live_dirs(os.path.join(target, "pairs"), base, applied_id)
     if not dirs:
         raise FileNotFoundError(f"no committed pairs under {target}")
@@ -878,8 +843,7 @@ def foreach_batch_ann_index(
     from postrack_spark.operators.similarity import cosine, sign_lsh_key
 
     dims = lsh_dims or list(range(1, 9))
-    target = target_dir or tempfile.mkdtemp(prefix="ann_idx_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_aidx_")
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "ann_idx")
 
     def pairs_of(left: DataFrame, right: DataFrame, same_batch: bool) -> DataFrame:
         l = left.select(
@@ -898,40 +862,24 @@ def foreach_batch_ann_index(
             )
         )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        os.makedirs(target, exist_ok=True)
-        spark = batch_df.sparkSession
-        applied_lineage, applied_id, base = _read_pointer_simple(target)
-        if applied_lineage == checkpoint and batch_id <= applied_id:
-            return
-        dname = f"d{batch_id:08d}"
-        new = batch_df.select(
+    def index_rows(batch_df: DataFrame) -> DataFrame:
+        return batch_df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v")
         ).withColumn("bk", sign_lsh_key(F.col("v"), dims))
-        new_path = os.path.join(target, "index", dname)
-        new.write.mode("overwrite").parquet(new_path)
-        new = spark.read.parquet(new_path)
 
+    def pairs_of_batch(new: DataFrame, old: DataFrame | None) -> DataFrame:
         sims = pairs_of(new, new, same_batch=True)
-        old_dirs = _live_dirs(os.path.join(target, "index"), base, applied_id)
-        if old_dirs:
-            old = spark.read.parquet(*old_dirs)
+        if old is not None:
             sims = sims.unionByName(pairs_of(old, new, same_batch=False))
-        out = (
+        return (
             sims.filter(F.col("sim") >= threshold)
             .select("id_a", "id_b", F.round("sim", 4).alias("cos_sim"))
             .distinct()
         )
-        out.write.mode("overwrite").parquet(os.path.join(target, "pairs", dname))
-        _swap_pointer_simple(target, checkpoint, batch_id, base=base)
 
-    query = (
-        vectors_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    return _start(vectors_stream, target, checkpoint, _pair_index_batch(
+        target, checkpoint, index_rows, pairs_of_batch
+    ))
 
 
 def foreach_batch_cluster_maintenance(
@@ -960,8 +908,7 @@ def foreach_batch_cluster_maintenance(
     the subgraph, so the subgraph closure equals the true closure."""
     from postrack_spark.operators.dedup import connected_components
 
-    target = target_dir or tempfile.mkdtemp(prefix="clusters_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_cc_")
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "clusters")
 
     def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         edges = batch_df.select("doc_a", "doc_b").distinct()
@@ -985,15 +932,8 @@ def foreach_batch_cluster_maintenance(
         carried = base.join(sub_labels.select("doc"), "doc", "left_anti")
         return carried.unionByName(sub_labels)
 
-    query = (
-        edges_stream.writeStream.foreachBatch(
-            _versioned_batch(target, checkpoint, merge, keep_depth)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    return _start(edges_stream, target, checkpoint,
+                  _versioned_batch(target, checkpoint, merge, keep_depth))
 
 
 def foreach_batch_scd2(
@@ -1021,9 +961,9 @@ def foreach_batch_scd2(
     admits them in order). ``value_cols`` are expressions over the
     event row (its ``after`` image). Read with ``read_view``;
     ``is_current`` = valid_to_lsn IS NULL."""
-    target = target_dir or tempfile.mkdtemp(prefix="scd2_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_scd2_")
     from pyspark.sql import Window
+
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "scd2")
 
     def merge(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         ev = batch_df.filter(F.col("op") != TRUNCATE).withColumn(key_name, key_expr)
@@ -1040,11 +980,7 @@ def foreach_batch_scd2(
         )
         if base is None:
             return vers
-        if set(base.columns) != set(vers.columns):
-            raise ValueError(
-                f"history schema drift under {target}: "
-                f"base={sorted(base.columns)} batch={sorted(vers.columns)}"
-            )
+        _check_drift(target, base, vers.columns, what="history")
         firsts = ev.groupBy(key_name).agg(F.min("lsn").alias("__first_lsn"))
         closed = (
             base.join(F.broadcast(firsts), key_name, "left")
@@ -1059,15 +995,8 @@ def foreach_batch_scd2(
         )
         return closed.unionByName(vers)
 
-    query = (
-        changes_stream.writeStream.foreachBatch(
-            _versioned_batch(target, checkpoint, merge, keep_depth)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    return _start(changes_stream, target, checkpoint,
+                  _versioned_batch(target, checkpoint, merge, keep_depth))
 
 
 def foreach_batch_incremental_join_agg_log(
@@ -1089,25 +1018,10 @@ def foreach_batch_incremental_join_agg_log(
     maintenance with foreach_batch_incremental_agg_log's storage
     (right when the maintained join view itself is large). Read with
     :func:`read_log_view`, filter count > 0."""
-    from postrack_spark.cdc.ivm import _signed_agg, _signed_join, signed_image_rows
-
-    target = target_dir or tempfile.mkdtemp(prefix="ivm_joinlog_")
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_ivmjl_")
-
-    def partial(batch_df: DataFrame) -> DataFrame:
-        da = signed_image_rows(batch_df, stream_cols)
-        joined = _signed_join(F.broadcast(da), static_signed, on)
-        return _signed_agg(joined, dims, measures, count_name)
-
-    query = (
-        changes_stream.writeStream.foreachBatch(
-            _log_structured_batch(
-                target, checkpoint, dims, measures, count_name, compact_every,
-                partial_fn=partial,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return target, query
+    target, checkpoint = _dirs(target_dir, checkpoint_dir, "ivm_joinlog")
+    return _start(changes_stream, target, checkpoint, _log_structured_batch(
+        target, checkpoint, dims, measures, count_name, compact_every,
+        partial_fn=_join_partial(
+            stream_cols, static_signed, on, dims, measures, count_name
+        ),
+    ))

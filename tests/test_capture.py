@@ -118,6 +118,45 @@ def test_ack_only_after_durable_flush():
     assert len(acks) > 1
 
 
+def test_persisted_file_is_fsynced_before_and_after_rename(tmp_path, monkeypatch):
+    """A roll is acked as soon as _persist returns, so it must survive
+    an OS crash: the file's bytes reach disk before the rename makes it
+    visible, and the directory entry reaches disk after the rename."""
+    import stat
+
+    calls: list[tuple[str, object]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        kind = "dir" if stat.S_ISDIR(st.st_mode) else "file"
+        calls.append((f"fsync {kind}", st.st_ino))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        calls.append(("replace", dst))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    writer = FrameFileWriter(str(tmp_path), max_frames=4)
+    capture_loop(iter(_golden_messages()), writer, ack=lambda lsn: None)
+    monkeypatch.undo()
+
+    names = sorted(os.listdir(tmp_path))
+    assert len(names) > 1
+    dir_ino = os.stat(tmp_path).st_ino
+    expected = []
+    for name in names:
+        path = os.path.join(tmp_path, name)
+        expected += [
+            ("fsync file", os.stat(path).st_ino),
+            ("replace", path),
+            ("fsync dir", dir_ino),
+        ]
+    assert calls == expected
+
+
 def test_writer_resumes_sequence():
     d = tempfile.mkdtemp(prefix="daemon_seq_")
     w1 = FrameFileWriter(d, max_frames=3)

@@ -114,7 +114,7 @@ def test_concurrent_reader_survives_swap_and_gc(spark, tmp_path):
     apply_batch(_batch(spark, [("a", 1)]), 0)
 
     # reader resolves the live version path (pre-swap snapshot)...
-    _, _, pre_swap_path = sinks._read_pointer(target)
+    pre_swap_path = os.path.join(target, sinks._read_pointer(target)[2])
     # ...writer commits the next batch (swap + GC) underneath it
     apply_batch(_batch(spark, [("a", 10)]), 1)
     # ...reader finishes from the old version: still complete on disk

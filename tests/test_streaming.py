@@ -223,6 +223,105 @@ def test_versioned_batch_schema_drift_raises(spark):
     assert read_view(spark, target).count() == 1
 
 
+_ENVELOPE = (
+    "lsn long, txid long, commit_ts timestamp, schema string, table string, "
+    "op string, after map<string,string>, before map<string,string>"
+)
+
+
+def _drift_sink(spark, root, sink, target, wide):
+    """Start the real ``foreach_batch_<sink>`` over a one-file stream
+    into ``target``; ``wide`` gives the view one more column."""
+    from postrack_spark.streaming import sinks
+
+    def stream(rows, schema):
+        src = os.path.join(root, f"src_{sink}_{wide}")
+        spark.createDataFrame(rows, schema).write.parquet(src)
+        return spark.readStream.schema(schema).parquet(src)
+
+    def img(c):
+        return F.element_at(F.col("img"), c)
+
+    ckpt = os.path.join(root, f"ckpt_{sink}_{wide}")
+    changes = [
+        (1, 1, None, "public", "t", "INSERT", {"k": "1", "s": "a", "v": "10"}, None),
+        (2, 2, None, "public", "t", "INSERT", {"k": "2", "s": "b", "v": "5"}, None),
+    ]
+    if sink == "apply_changes":
+        schema = _ENVELOPE + (", extra long" if wide else "")
+        rows = [(*r, 0) for r in changes] if wide else changes
+        return sinks.foreach_batch_apply_changes(
+            stream(rows, schema), F.element_at(F.col("after"), "k"),
+            target_dir=target, checkpoint_dir=ckpt,
+        )
+    if sink == "scd2":
+        values = {"s": F.element_at(F.col("after"), "s")}
+        if wide:
+            values["v"] = F.element_at(F.col("after"), "v")
+        return sinks.foreach_batch_scd2(
+            stream(changes, _ENVELOPE), F.element_at(F.col("after"), "k"),
+            values, key_name="k", target_dir=target, checkpoint_dir=ckpt,
+        )
+    measures = {"v": img("v").cast("long")}
+    if sink == "incremental_agg":
+        if wide:
+            measures["w"] = img("v").cast("long")
+        return sinks.foreach_batch_incremental_agg(
+            stream(changes, _ENVELOPE), {"s": img("s")}, measures,
+            target_dir=target, checkpoint_dir=ckpt,
+        )
+    if sink == "incremental_join_agg":
+        static = spark.createDataFrame(
+            [(1, 1, "x"), (1, 2, "y")], "sign int, bk long, label string"
+        )
+        join_measures = {"v": F.col("v")}
+        if wide:
+            join_measures["w"] = F.col("v") * 2
+        return sinks.foreach_batch_incremental_join_agg(
+            stream(changes, _ENVELOPE),
+            {"k": img("k").cast("long"), "v": img("v").cast("long")},
+            static, [("k", "bk")], {"label": F.col("label")}, join_measures,
+            target_dir=target, checkpoint_dir=ckpt,
+        )
+    partials = stream([("a", 1, 10), ("b", 1, 5)], "g string, n long, v long")
+    if sink == "fold":
+        return sinks.foreach_batch_fold(
+            partials, ["g"], ["n", "v"] if wide else ["n"],
+            target_dir=target, checkpoint_dir=ckpt,
+        )
+    aggs = [F.max("v").alias("v"), *([F.min("v").alias("w")] if wide else [])]
+    return sinks.foreach_batch_merge_fold(
+        partials, ["g"], lambda df: df.groupBy("g").agg(*aggs),
+        target_dir=target, checkpoint_dir=ckpt,
+    )
+
+
+@pytest.mark.parametrize(
+    "sink",
+    ["apply_changes", "incremental_agg", "incremental_join_agg", "fold",
+     "merge_fold", "scd2"],
+)
+def test_real_sink_schema_drift_raises(spark, tmp_path, sink):
+    """Each versioned sink's own merge raises on schema drift: a second
+    stream into the same view with a different column set fails its
+    batch with the drift ValueError, and the committed view stays as
+    the first stream left it."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    target = str(tmp_path / "view")
+    _, q = _drift_sink(spark, str(tmp_path), sink, target, wide=False)
+    q.awaitTermination()
+    committed = sorted(read_view(spark, target).toJSON().collect())
+    assert committed
+
+    _, q = _drift_sink(spark, str(tmp_path), sink, target, wide=True)
+    with pytest.raises(
+        StreamingQueryException, match=r"ValueError: (view|history) schema drift"
+    ):
+        q.awaitTermination()
+    assert sorted(read_view(spark, target).toJSON().collect()) == committed
+
+
 def test_versioned_time_travel_and_lineage_restart_gc(spark):
     """read_view(version=N) reads a retained snapshot; and when a FRESH
     lineage restarts batch ids at 0, GC must never delete the live
@@ -354,7 +453,7 @@ def test_dedup_index_replay_and_resume(spark):
     against the accumulated index."""
     from postrack_spark.streaming.sinks import (
         _live_dirs,
-        _read_pointer_simple,
+        _read_pointer,
         foreach_batch_dedup_index,
         read_dedup_pairs,
     )
@@ -386,7 +485,7 @@ def test_dedup_index_replay_and_resume(spark):
     q1.awaitTermination()
     pairs = {(r["doc_a"], r["doc_b"]) for r in read_dedup_pairs(spark, t1).collect()}
     assert pairs == {(1, 2)}
-    _, applied, base = _read_pointer_simple(target)
+    _, applied, base = _read_pointer(target)
     n_index_dirs = len(_live_dirs(os.path.join(target, "index"), base, applied))
 
     # resume on the same checkpoint with no new files: nothing replays
@@ -399,7 +498,7 @@ def test_dedup_index_replay_and_resume(spark):
     )
     q2.awaitTermination()
     assert {(r["doc_a"], r["doc_b"]) for r in read_dedup_pairs(spark, t2).collect()} == {(1, 2)}
-    _, applied2, base2 = _read_pointer_simple(target)
+    _, applied2, base2 = _read_pointer(target)
     assert len(_live_dirs(os.path.join(target, "index"), base2, applied2)) == n_index_dirs
 
 
@@ -411,7 +510,7 @@ def test_pair_index_compaction(spark):
 
     from postrack_spark.streaming.sinks import (
         _live_dirs,
-        _read_pointer_simple,
+        _read_pointer,
         compact_pair_index,
         foreach_batch_dedup_index,
         read_dedup_pairs,
@@ -440,12 +539,12 @@ def test_pair_index_compaction(spark):
     assert before == {(1, 2)}
 
     compact_pair_index(spark, target)
-    _, applied, base = _read_pointer_simple(target)
+    _, applied, base = _read_pointer(target)
     assert base == f"c{applied:08d}"
     assert len(_live_dirs(os.path.join(target, "index"), base, applied)) == 1
     assert {(r["doc_a"], r["doc_b"]) for r in read_dedup_pairs(spark, target).collect()} == before
     compact_pair_index(spark, target)  # idempotent no-op at same id
-    assert _read_pointer_simple(target)[2] == base
+    assert _read_pointer(target)[2] == base
 
     # doc 3 arrives AFTER compaction: cross-batch pairs still found
     # against the compacted base
